@@ -518,17 +518,20 @@ def test_update_and_merge_refuse_identity_assignment(spark, ds, tmp_path):
 def test_update_sql_dispatch_with_nested_commas(spark, ds, tmp_path):
     import uuid as _uuid
 
-    from x_spark.sources.txlog import _parse_update_statement
+    from x_spark.sources.sql_dml import Statement, parse_update
+
+    def parse(sql):
+        return parse_update(Statement(spark, sql))
 
     # parser: top-level comma split, quoted 'where', no-WHERE form
-    tgt, asg, pred = _parse_update_statement(
+    tgt, asg, pred = parse(
         "UPDATE t SET note = concat(a, ', where ', b), n = n + 1 "
         "WHERE x = 'where'"
     )
     assert tgt == "t" and pred == "x = 'where'"
     assert asg == {"note": "concat(a, ', where ', b)", "n": "n + 1"}
-    assert _parse_update_statement("update `db`.`t` set a = 1")[2] == "TRUE"
-    assert _parse_update_statement("select 1") is None
+    assert parse("update `db`.`t` set a = 1")[2] == "TRUE"
+    assert parse("select 1") is None
 
     name = f"upd_sql_{_uuid.uuid4().hex[:8]}"
     ref = TableRef(table=name)

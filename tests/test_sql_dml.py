@@ -18,6 +18,7 @@ from x_spark.errors import DataSourceException
 from x_spark.sources import init_datasource
 from x_spark.sources.base import MergeSpec, TableRef
 from x_spark.sources.sql_dml import (
+    Statement,
     parse_create_table,
     parse_insert,
     parse_merge,
@@ -41,15 +42,16 @@ def _rows(df):
 # -- parsers ---------------------------------------------------------------
 
 
-def test_parse_merge_full_grammar():
-    ms = parse_merge(
+def test_parse_merge_full_grammar(spark):
+    ms = parse_merge(Statement(
+        spark,
         "MERGE WITH SCHEMA EVOLUTION INTO tgt AS t USING (SELECT 1 AS a) s "
         "ON t.a = s.a AND t.b > 0 "
         "WHEN MATCHED AND s.a < 5 THEN UPDATE SET b = s.a + 1, c = 'x, y' "
         "WHEN MATCHED THEN DELETE "
         "WHEN NOT MATCHED BY TARGET THEN INSERT (a, b) VALUES (s.a, 0) "
-        "WHEN NOT MATCHED BY SOURCE AND t.b = 2 THEN DELETE"
-    )
+        "WHEN NOT MATCHED BY SOURCE AND t.b = 2 THEN DELETE",
+    ))
     assert ms.schema_evolution
     assert ms.target == "tgt" and ms.target_alias == "t"
     assert ms.source_sql == "(SELECT 1 AS a)" and ms.source_alias == "s"
@@ -64,41 +66,49 @@ def test_parse_merge_full_grammar():
     assert ms.by_source[0].condition == "t.b = 2"
 
 
-def test_parse_merge_update_star_and_insert_star():
-    ms = parse_merge(
+def test_parse_merge_update_star_and_insert_star(spark):
+    ms = parse_merge(Statement(
+        spark,
         "MERGE INTO t USING s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
+        "WHEN NOT MATCHED THEN INSERT *",
+    ))
     assert ms.matched[0].assignments is None
     assert ms.not_matched[0].columns is None
 
 
-def test_parse_merge_keywords_inside_literals():
+def test_parse_merge_keywords_inside_literals(spark):
     # 'WHEN', 'THEN', 'USING', 'ON' inside string literals must not
     # confuse the top-level scanner
-    ms = parse_merge(
+    ms = parse_merge(Statement(
+        spark,
         "MERGE INTO t USING s ON t.k = s.k "
-        "WHEN MATCHED THEN UPDATE SET note = 'when using then on (x'"
-    )
+        "WHEN MATCHED THEN UPDATE SET note = 'when using then on (x'",
+    ))
     assert ms.matched[0].assignments == {"note": "'when using then on (x'"}
 
 
-def test_parse_insert_shapes():
-    p = parse_insert("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+def test_parse_insert_shapes(spark):
+    def parse(sql):
+        return parse_insert(Statement(spark, sql))
+
+    p = parse("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
     assert not p.overwrite and p.columns is None
     assert p.source_sql.startswith("SELECT * FROM VALUES")
-    p = parse_insert("INSERT OVERWRITE TABLE t (a, b) SELECT x, y FROM u")
+    p = parse("INSERT OVERWRITE TABLE t (a, b) SELECT x, y FROM u")
     assert p.overwrite and p.columns == ["a", "b"]
-    p = parse_insert("INSERT INTO t PARTITION (p='x') VALUES (1)")
+    p = parse("INSERT INTO t PARTITION (p='x') VALUES (1)")
     assert p.partition == {"p": "x"}
-    p = parse_insert("INSERT OVERWRITE t PARTITION (p) SELECT * FROM u")
+    p = parse("INSERT OVERWRITE t PARTITION (p) SELECT * FROM u")
     assert p.partition == {"p": None}
-    assert parse_insert("SELECT 1") is None
+    assert parse("SELECT 1") is None
 
 
-def test_parse_create_table():
-    ct = parse_create_table(
+def test_parse_create_table(spark):
+    def parse(sql):
+        return parse_create_table(Statement(spark, sql))
+
+    ct = parse(
         "CREATE TABLE IF NOT EXISTS db.t (a INT, b STRING) USING txlog "
         "PARTITIONED BY (b) TBLPROPERTIES ('k'='v')"
     )
@@ -106,9 +116,9 @@ def test_parse_create_table():
     assert ct.columns_ddl == "a INT, b STRING"
     assert ct.partition_by == ["b"] and ct.properties == {"k": "v"}
     # non-txlog CREATE passes through
-    assert parse_create_table("CREATE TABLE t (a INT) USING parquet") is None
-    assert parse_create_table("CREATE TABLE t (a INT)") is None
-    ct = parse_create_table(
+    assert parse("CREATE TABLE t (a INT) USING parquet") is None
+    assert parse("CREATE TABLE t (a INT)") is None
+    ct = parse(
         "CREATE TABLE t2 USING txlog AS SELECT a, b AS c FROM x"
     )
     assert ct.as_select == "SELECT a, b AS c FROM x"
@@ -703,3 +713,128 @@ def test_rename_to_rejects_view_name_collision(spark, ds):
         ds._execute_statement(f"DROP VIEW IF EXISTS {v}_tmp")
         ds._execute_statement(f"DROP VIEW IF EXISTS {v}")
         ds.drop_table(TableRef(table=name))
+
+
+# -- references resolved from Spark's own parse ----------------------------
+# Only relation positions name a table: a txlog name used as a column or
+# an output alias stays what it is, and literals reach the store intact.
+
+
+def test_txlog_name_used_as_column_is_left_alone(spark, ds):
+    zone, regions = _name("zone"), _name("regions")
+    ds.sql(f"CREATE TABLE {zone} (id INT) USING txlog")
+    ds.sql(f"CREATE TABLE {regions} (region STRING, {zone} STRING) USING txlog")
+    ds.sql(f"INSERT INTO {regions} VALUES ('r1', 'east'), ('r2', 'west')")
+    assert _rows(ds.sql(f"SELECT {zone} FROM {regions}")) == [
+        ("east",), ("west",),
+    ]
+
+
+def test_txlog_name_used_as_output_alias_is_left_alone(spark, ds):
+    regions, sales = _name("regions"), _name("sales")
+    ds.sql(f"CREATE TABLE {regions} (region STRING) USING txlog")
+    ds.sql(f"CREATE TABLE {sales} (amount INT) USING txlog")
+    ds.sql(f"INSERT INTO {sales} VALUES (1), (2), (3)")
+    out = ds.sql(f"SELECT count(*) AS {regions} FROM {sales}")
+    assert out.columns == [regions]
+    assert _rows(out) == [(3,)]
+
+
+def _partitioned(ds):
+    pt = _name("pt")
+    ds.sql(f"CREATE TABLE {pt} (v INT, p STRING) USING txlog "
+           "PARTITIONED BY (p)")
+    return pt
+
+
+def test_insert_static_partition_value_with_comma(spark, ds):
+    pt = _partitioned(ds)
+    ds.sql(f"INSERT INTO {pt} PARTITION (p='x,y') VALUES (1)")
+    assert _rows(ds.sql(f"SELECT v, p FROM {pt}")) == [(1, "x,y")]
+
+
+def test_insert_static_partition_value_with_paren(spark, ds):
+    pt = _partitioned(ds)
+    ds.sql(f"INSERT INTO {pt} PARTITION (p='q)r') VALUES (1)")
+    assert _rows(ds.sql(f"SELECT v, p FROM {pt}")) == [(1, "q)r")]
+
+
+def test_tblproperties_value_with_escaped_quote(spark, ds):
+    pt = _partitioned(ds)
+    ds.sql(f"ALTER TABLE {pt} SET TBLPROPERTIES ('note'='it''s')")
+    snap = resolve_snapshot(ds._table_path(TableRef(table=pt)))
+    assert snap.configuration["note"] == "it's"
+
+
+def test_grammar_error_on_txlog_statement_is_datasource_error(spark, ds):
+    t = _seed_merge(ds, spark)
+    with pytest.raises(DataSourceException):
+        ds.sql(f"MERGE INTO {t} USING {t} s ON {t}.pk = s.pk "
+               "WHEN MATCHED THEN FROB")
+
+
+@pytest.fixture()
+def nested(spark, ds):
+    """Two txlog tables. ``a`` commits CREATE (version 0), its
+    TBLPROPERTIES (1), pk 1-2 (2) and pk 3 (3); ``b`` holds pk 2-3."""
+    a, b = _name("nest_a"), _name("nest_b")
+    ds.sql(f"CREATE TABLE {a} (pk INT, v INT) USING txlog "
+           "TBLPROPERTIES ('enableChangeDataFeed'='true')")
+    ds.sql(f"INSERT INTO {a} VALUES (1, 10), (2, 20)")
+    ds.sql(f"INSERT INTO {a} VALUES (3, 30)")
+    ds.sql(f"CREATE TABLE {b} (pk INT) USING txlog")
+    ds.sql(f"INSERT INTO {b} VALUES (2), (3)")
+    return a, b
+
+
+def test_txlog_names_in_in_exists_and_scalar_subqueries(spark, ds, nested):
+    a, b = nested
+    assert _rows(ds.sql(
+        f"SELECT pk FROM {a} WHERE pk IN (SELECT pk FROM {b})"
+    )) == [(2,), (3,)]
+    assert _rows(ds.sql(
+        f"SELECT pk FROM {a} WHERE NOT EXISTS "
+        f"(SELECT 1 FROM {b} WHERE {b}.pk = {a}.pk)"
+    )) == [(1,)]
+    assert _rows(ds.sql(
+        f"SELECT pk, (SELECT max(pk) FROM {b}) AS m FROM {a} WHERE pk = 1"
+    )) == [(1, 3)]
+
+
+def test_txlog_name_in_cte_body(spark, ds, nested):
+    a, _ = nested
+    assert _rows(ds.sql(
+        f"WITH big AS (SELECT pk FROM {a} WHERE v > 10) "
+        "SELECT count(*) FROM big"
+    )) == [(2,)]
+
+
+def test_version_as_of_inside_subquery(spark, ds, nested):
+    a, b = nested
+    assert _rows(ds.sql(
+        f"SELECT pk FROM {b} WHERE pk IN "
+        f"(SELECT pk FROM {a} VERSION AS OF 2)"
+    )) == [(2,)]
+    assert _rows(ds.sql(
+        f"SELECT count(*) FROM (SELECT * FROM {a} VERSION AS OF 2) old"
+    )) == [(2,)]
+
+
+def test_table_changes_in_a_join(spark, ds, nested):
+    a, b = nested
+    assert _rows(ds.sql(
+        f"SELECT c._change_type, c.pk FROM table_changes('{a}', 3) c "
+        f"JOIN {b} ON c.pk = {b}.pk"
+    )) == [("insert", 3)]
+
+
+def test_registered_view_in_subquery(spark, ds, nested):
+    a, b = nested
+    v = _name("nest_v")
+    ds.sql(f"CREATE VIEW {v} AS SELECT pk FROM {b} WHERE pk > 2")
+    try:
+        assert _rows(ds.sql(
+            f"SELECT pk, v FROM {a} WHERE pk IN (SELECT pk FROM {v})"
+        )) == [(3, 30)]
+    finally:
+        ds.sql(f"DROP VIEW IF EXISTS {v}")

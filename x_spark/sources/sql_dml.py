@@ -1,27 +1,32 @@
-"""SQL DML over txlog tables: CREATE TABLE / INSERT / MERGE INTO.
+"""SQL DML over txlog tables: CREATE TABLE / INSERT / MERGE INTO / UPDATE.
 
 txlog tables live outside the Spark catalog (the names file is the
-metastore analogue), so Spark's own parser never sees these verbs for
-them. This module parses the three DML statement shapes the reference
-drives its whole test harness through (tests/dbr_notebook/test_case.sql
-cmds 1, 15-18 are ``INSERT INTO ... VALUES``; its update/upsert
-semantics are Delta ``MERGE`` — reference datasource/delta.py:135-148)
-and executes them against the transactional store:
+metastore analogue), so Spark cannot execute these verbs for them. It
+can still READ them: every statement is parsed once by Spark's own
+parser (``sessionState().sqlParser().parsePlan``) and the unresolved
+plan decides what the statement is. Each plan node carries its
+``origin()`` start/stop offsets into the statement text, so conditions,
+assignment values and DDL come back as exact slices of what the user
+wrote — literals, escapes and nesting are the grammar's business.
+:class:`Statement` wraps that one parse; the ``parse_*`` functions turn
+it into the plain values the executors below consume:
 
 - ``CREATE TABLE t (cols) USING txlog [PARTITIONED BY ...]
   [TBLPROPERTIES (...)]`` and the CTAS form (``... USING txlog AS
   SELECT ...``) — one metaData commit (plus the adds for CTAS).
 - ``INSERT INTO/OVERWRITE t [PARTITION (...)] [(cols)]
-  VALUES ... | SELECT ...`` — routed to the append / overwrite /
-  replaceWhere paths, so DEFAULT fill, generated columns, identity
-  allocation, CHECK constraints and CDF all apply exactly as for the
-  API writes.
+  VALUES ... | SELECT ...`` and ``INSERT INTO t REPLACE WHERE cond
+  <source>`` — routed to the append / overwrite / replaceWhere paths,
+  so DEFAULT fill, generated columns, identity allocation, CHECK
+  constraints and CDF all apply exactly as for the API writes.
 - Full Delta ``MERGE [WITH SCHEMA EVOLUTION] INTO`` with any number of
   ``WHEN MATCHED [AND cond] THEN UPDATE SET ...|DELETE``,
   ``WHEN NOT MATCHED [BY TARGET] [AND cond] THEN INSERT ...`` and
   ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE ...|DELETE``
   clauses, evaluated in clause order (first satisfied clause wins,
   Delta's rule).
+- ``UPDATE t SET c = e, ... [WHERE pred]`` (executed by
+  ``TxLogDataSource.update``).
 
 Scale shape of the merge executor: candidate files are pruned by
 footer key-range overlap before anything is read; the single
@@ -36,15 +41,14 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, Window, functions as F
 
 from x_spark.errors import DataSourceException
 from x_spark.sources.base import TableRef
 
-IDENT = r"(?:`[^`]+`|[A-Za-z_]\w*)(?:\s*\.\s*(?:`[^`]+`|[A-Za-z_]\w*))*"
 
-
-# -- top-level token scanning ------------------------------------------
+# -- top-level token scanning (footer-stats predicate pruning) ---------
 
 
 def structural_mask(s: str) -> list[bool]:
@@ -72,21 +76,6 @@ def structural_mask(s: str) -> list[bool]:
             out[i] = True
         i += 1
     return out
-
-
-def find_keyword(s: str, kw: str, start: int = 0) -> int:
-    """Index of the first TOP-LEVEL, word-bounded, case-insensitive
-    occurrence of ``kw`` (may contain internal whitespace, matched as
-    ``\\s+``), or -1."""
-    mask = structural_mask(s)
-    pat = re.compile(
-        r"(?<![\w`])" + r"\s+".join(map(re.escape, kw.split())) + r"(?![\w`])",
-        re.I,
-    )
-    for m in pat.finditer(s, start):
-        if mask[m.start()]:
-            return m.start()
-    return -1
 
 
 def find_close_paren(s: str, start: int) -> int:
@@ -125,25 +114,109 @@ def split_top_level(s: str, sep: str = ",") -> list[str]:
     return [p.strip() for p in parts]
 
 
-def _norm(ident: str) -> str:
-    parts = re.findall(r"`[^`]+`|[A-Za-z_]\w*", ident)
-    return ".".join(p[1:-1] if p.startswith("`") else p for p in parts)
-
-
 def _last(ident: str) -> str:
-    return _norm(ident).split(".")[-1]
+    """Last part of a dotted, possibly backticked identifier."""
+    return re.findall(r"`[^`]+`|[A-Za-z_]\w*", ident)[-1].strip("`")
 
 
-def parse_assignments(s: str) -> dict[str, str]:
-    """``c1 = e1, t.c2 = e2`` -> {c1: e1, c2: e2} (qualifiers dropped
-    from the TARGET side; expressions kept verbatim)."""
-    out: dict[str, str] = {}
-    for part in split_top_level(s):
-        m = re.match(rf"\s*({IDENT})\s*=\s*(.+)\s*", part, re.S)
-        if not m:
-            raise DataSourceException(f"cannot parse assignment {part!r}")
-        out[_last(m.group(1))] = m.group(2).strip()
-    return out
+# -- one parse per statement -------------------------------------------
+
+
+class Statement:
+    """One SQL statement and its unresolved plan from Spark's parser.
+    A grammar error raises :class:`DataSourceException` carrying
+    Spark's message (which quotes the statement)."""
+
+    def __init__(self, spark, sql: str) -> None:
+        self.sql = sql
+        try:
+            self.plan = (spark._jsparkSession.sessionState().sqlParser()
+                         .parsePlan(sql))
+        except ParseException as exc:
+            raise DataSourceException(
+                f"cannot parse SQL statement: {str(exc).strip()}"
+            ) from exc
+        self.kind = self.plan.nodeName()
+
+    @staticmethod
+    def items(seq) -> list:
+        """A Scala ``Seq`` as a Python list."""
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def text(self, node) -> str:
+        """The statement text ``node`` was parsed from."""
+        o = node.origin()
+        return self.sql[o.startIndex().get():o.stopIndex().get() + 1]
+
+    def query(self, node) -> str:
+        """Text of a query plan node. It starts at the leftmost
+        descendant: the Project of ``FROM t SELECT a`` begins after
+        its relation."""
+        o = node.origin()
+        start, stop = o.startIndex().get(), o.stopIndex().get()
+        while node.children().size():
+            node = node.children().apply(0)
+            start = min(start, node.origin().startIndex().get())
+        return self.sql[start:stop + 1]
+
+    def between(self, first, last) -> str:
+        """Text from ``first``'s first token to ``last``'s last one."""
+        return self.sql[first.origin().startIndex().get():
+                        last.origin().stopIndex().get() + 1]
+
+    def predicate(self, cond) -> str:
+        """A WHERE condition's text, TRUE when there is none. (Spark
+        stands in a shared ``Literal(true)`` for a missing WHERE, so
+        its origin belongs to no statement.)"""
+        if cond is None or cond.toString() == "true":
+            return "TRUE"
+        return self.text(cond)
+
+    @staticmethod
+    def opt(option):
+        """A Scala ``Option`` as its value or None."""
+        return option.get() if option.isDefined() else None
+
+    @staticmethod
+    def mapping(m) -> dict:
+        """A Scala ``Map`` as a Python dict."""
+        return {kv._1(): kv._2() for kv in Statement.items(m.toSeq())}
+
+    @staticmethod
+    def name(node) -> str:
+        """Dotted name of a table reference, looking through the
+        SubqueryAlias (``t AS x``) and Filter (CHECK) wrappers."""
+        while node.nodeName() in ("SubqueryAlias", "Filter"):
+            node = node.children().apply(0)
+        parts = (node.nameParts() if node.nodeName() == "UnresolvedIdentifier"
+                 else node.multipartIdentifier())
+        return ".".join(Statement.items(parts))
+
+    @staticmethod
+    def alias(node) -> str | None:
+        return node.alias() if node.nodeName() == "SubqueryAlias" else None
+
+    def target(self):
+        """The table reference a DML/DDL statement writes or alters."""
+        if self.kind in ("InsertIntoStatement", "OverwriteByExpression"):
+            return self.plan.table()
+        return self.plan.children().apply(0)
+
+    def walk(self):
+        """Yield ``(node, kind, parent kind)`` over every plan node:
+        children, CTE bodies and expression subqueries (the last two
+        are a node's ``innerChildren`` — ``children()`` omits them)."""
+        stack = [(self.plan, None)]
+        leaves = ("UnresolvedRelation", "RelationTimeTravel",
+                  "UnresolvedTableValuedFunction")
+        while stack:
+            node, parent = stack.pop()
+            kind = node.nodeName()
+            yield node, kind, parent
+            if kind not in leaves:
+                kids = (self.items(node.children())
+                        + self.items(node.innerChildren()))
+                stack.extend((k, kind) for k in reversed(kids))
 
 
 # -- parsed statement shapes -------------------------------------------
@@ -199,295 +272,117 @@ class MergeInto:
 # -- parsers ------------------------------------------------------------
 
 
-def parse_create_table(stmt: str) -> CreateTable | None:
+def parse_create_table(st: Statement) -> CreateTable | None:
     """``CREATE TABLE [IF NOT EXISTS] t [(coldefs)] USING txlog
     [PARTITIONED BY (cols)] [TBLPROPERTIES ('k'='v',...)] [AS select]``.
     Only statements that say ``USING txlog`` are ours — everything
     else passes through to Spark's catalog untouched."""
-    s = stmt.rstrip().rstrip(";")
-    m = re.match(
-        rf"\s*create\s+table\s+(if\s+not\s+exists\s+)?({IDENT})\s*",
-        s, re.I,
-    )
-    if not m or find_keyword(s, "using") < 0:
+    if st.kind not in ("CreateTable", "CreateTableAsSelect"):
         return None
-    u = find_keyword(s, "using")
-    mu = re.match(r"using\s+(\w+)", s[u:], re.I)
-    if not mu or mu.group(1).lower() != "txlog":
+    p = st.plan
+    spec = p.tableSpec()
+    if (st.opt(spec.provider()) or "").lower() != "txlog":
         return None
-    name, ine = _norm(m.group(2)), bool(m.group(1))
-    cols_ddl = None
-    between = s[m.end():u].strip()
-    if between:
-        if not (between.startswith("(") and between.endswith(")")):
+    part_cols = []
+    for t in st.items(p.partitioning()):
+        if t.name() != "identity":
             raise DataSourceException(
-                f"cannot parse CREATE TABLE column list: {between!r}"
+                f"txlog tables partition by columns, not {t.describe()}"
             )
-        cols_ddl = between[1:-1].strip()
-    rest = s[u + mu.end():]
-    part_cols: list[str] = []
-    props: dict[str, str] = {}
-    as_select = None
-    a = find_keyword(rest, "as")
-    if a >= 0:
-        as_select = rest[a + 2:].strip()
-        rest = rest[:a]
-    mp = re.search(r"partitioned\s+by\s*\(([^)]*)\)", rest, re.I)
-    if mp:
-        part_cols = [_last(c) for c in mp.group(1).split(",") if c.strip()]
-    mt = re.search(r"tblproperties\s*\((.*)\)", rest, re.I | re.S)
-    if mt:
-        props = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'", mt.group(1)))
-    if cols_ddl is None and as_select is None:
-        raise DataSourceException(
-            "CREATE TABLE ... USING txlog needs a column list or AS SELECT"
-        )
-    return CreateTable(name, cols_ddl, part_cols, props, as_select, ine)
-
-
-def parse_insert(stmt: str) -> InsertStmt | None:
-    """``INSERT INTO|OVERWRITE [TABLE] t [PARTITION (...)] [(cols)]
-    VALUES ...|SELECT ...|WITH ...|FROM ...|TABLE ...``."""
-    s = stmt.rstrip().rstrip(";")
-    m = re.match(
-        rf"\s*insert\s+(into|overwrite)\s+(?:table\s+)?({IDENT})\s*",
-        s, re.I,
-    )
-    if not m:
-        return None
-    overwrite = m.group(1).lower() == "overwrite"
-    name = _norm(m.group(2))
-    rest = s[m.end():].lstrip()
-    # INSERT INTO t REPLACE WHERE <cond> <source> — Delta's
-    # predicate-scoped atomic replacement verb: the condition runs to
-    # the first top-level source keyword
-    replace_where = None
-    m_rw = re.match(r"replace\s+where\b", rest, re.I)
-    if m_rw:
-        body = rest[m_rw.end():]
-        starts = [i for i in (find_keyword(body, k)
-                              for k in ("select", "values", "with",
-                                        "from", "table"))
-                  if i >= 0]
-        if not starts:
-            raise DataSourceException(
-                f"REPLACE WHERE without an INSERT source: {body[:60]!r}"
-            )
-        cut = min(starts)
-        replace_where = body[:cut].strip()
-        if not replace_where:
-            raise DataSourceException("empty REPLACE WHERE condition")
-        rest = body[cut:].lstrip()
-    partition: dict[str, str | None] = {}
-    mp = re.match(r"partition\s*\(([^)]*)\)\s*", rest, re.I)
-    if mp:
-        for item in mp.group(1).split(","):
-            if "=" in item:
-                k, v = item.split("=", 1)
-                partition[_last(k)] = v.strip().strip("'\"")
-            elif item.strip():
-                partition[_last(item)] = None  # dynamic
-        rest = rest[mp.end():].lstrip()
-    columns = None
-    if rest.startswith("("):
-        close = find_close_paren(rest, 0)
-        if close < 0:
-            raise DataSourceException(
-                f"unbalanced parentheses in INSERT: {rest[:60]!r}"
-            )
-        inner = rest[1:close].strip()
-        if not re.match(r"\s*(select|with|values|from|table)\b", inner, re.I):
-            columns = [_last(c) for c in inner.split(",") if c.strip()]
-            rest = rest[close + 1:].lstrip()
-    if not re.match(r"(values|select|with|from|table)\b", rest, re.I):
-        # a leading parenthesized subquery source: unwrap is NOT safe
-        # (set-op suffixes); just pass it through as SELECT * FROM (..)
-        if rest.startswith("("):
-            rest = f"SELECT * FROM {rest}"
-        else:
-            raise DataSourceException(
-                f"cannot parse INSERT source: {rest[:60]!r}"
-            )
-    if re.match(r"values\b", rest, re.I):
-        rest = "SELECT * FROM " + rest
-    if replace_where is not None and (overwrite or partition):
-        raise DataSourceException(
-            "REPLACE WHERE composes with INSERT INTO only "
-            "(no OVERWRITE, no PARTITION spec) — Delta's rule"
-        )
-    return InsertStmt(name, overwrite, columns, partition, rest,
-                      replace_where)
-
-
-def _clause_then(body: str) -> int:
-    """Index of the THEN that opens the clause ACTION — i.e. the first
-    top-level THEN outside any CASE ... END (an unparenthesized CASE
-    WHEN inside the clause condition owns its own THENs)."""
-    mask = structural_mask(body)
-    depth = 0
-    for m in re.finditer(r"(?<![\w`])(case|end|then)(?![\w`])", body, re.I):
-        if not mask[m.start()]:
-            continue
-        kw = m.group(1).lower()
-        if kw == "case":
-            depth += 1
-        elif kw == "end":
-            depth = max(0, depth - 1)
-        elif depth == 0:
-            return m.start()
-    return -1
-
-
-def _parse_when_clause(clause: str) -> tuple[str, object]:
-    """One ``WHEN ...`` clause body (text after the WHEN keyword).
-    Returns (kind, parsed) with kind in matched/not_matched/by_source."""
-    body = clause.strip()
-    t = _clause_then(body)
-    if t < 0:
-        raise DataSourceException(f"MERGE clause missing THEN: {body[:60]!r}")
-    head, action = body[:t].strip(), body[t + 4:].strip()
-    kind: str
-    cond: str | None = None
-    mm = re.match(r"not\s+matched(\s+by\s+(source|target))?\s*", head, re.I)
-    if mm:
-        kind = ("by_source" if (mm.group(2) or "").lower() == "source"
-                else "not_matched")
-        head = head[mm.end():].strip()
-    elif re.match(r"matched\b", head, re.I):
-        kind = "matched"
-        head = head[7:].strip()
+        part_cols.append(list(t.references()[0].fieldNames())[-1])
+    cols_ddl = as_select = None
+    if st.kind == "CreateTableAsSelect":
+        as_select = st.query(p.query())
     else:
-        raise DataSourceException(f"cannot parse MERGE clause: {body[:60]!r}")
-    if head:
-        ma = re.match(r"and\b", head, re.I)
-        if not ma:
+        cols = st.items(p.columns())
+        if not cols:
             raise DataSourceException(
-                f"unexpected text in MERGE clause head: {head[:60]!r}"
+                "CREATE TABLE ... USING txlog needs a column list or AS SELECT"
             )
-        cond = head[3:].strip()
-    if kind in ("matched", "by_source"):
-        if re.fullmatch(r"delete", action, re.I):
-            return kind, MatchedClause(cond, "delete", None)
-        mu = re.match(r"update\s+set\s+(.*)", action, re.I | re.S)
-        if not mu:
-            raise DataSourceException(
-                f"MERGE {kind} clause must be UPDATE SET or DELETE: "
-                f"{action[:60]!r}"
-            )
-        rhs = mu.group(1).strip()
-        if rhs == "*" and kind == "by_source":
-            raise DataSourceException(
-                "MERGE NOT MATCHED BY SOURCE cannot UPDATE SET * "
-                "(there is no source row)"
-            )
-        assigns = None if rhs == "*" else parse_assignments(rhs)
-        return kind, MatchedClause(cond, "update", assigns)
-    mi = re.match(r"insert\s*(.*)", action, re.I | re.S)
-    if not mi:
-        raise DataSourceException(
-            f"MERGE NOT MATCHED clause must be INSERT: {action[:60]!r}"
-        )
-    tail = mi.group(1).strip()
-    if tail == "*":
-        return kind, InsertClause(cond, None, None)
-    mv = re.match(r"\(([^)]*)\)\s*values\s*\((.*)\)\s*$", tail, re.I | re.S)
-    if not mv:
-        raise DataSourceException(
-            f"cannot parse INSERT clause: {tail[:60]!r}"
-        )
-    cols = [_last(c) for c in mv.group(1).split(",") if c.strip()]
-    vals = split_top_level(mv.group(2))
-    if len(cols) != len(vals):
-        raise DataSourceException(
-            f"INSERT clause arity mismatch: {len(cols)} columns, "
-            f"{len(vals)} values"
-        )
-    return kind, InsertClause(cond, cols, vals)
+        cols_ddl = st.between(cols[0], cols[-1])
+    return CreateTable(st.name(st.target()), cols_ddl, part_cols,
+                       st.mapping(spec.properties()), as_select,
+                       p.ignoreIfExists())
 
 
-def parse_merge(stmt: str) -> MergeInto | None:
+def parse_insert(st: Statement) -> InsertStmt | None:
+    """``INSERT INTO|OVERWRITE [TABLE] t [PARTITION (...)] [(cols)]
+    <source>`` and ``INSERT INTO t REPLACE WHERE cond <source>``. The
+    plan node's own origin is the INSERT head; the source is the rest
+    of the statement."""
+    if st.kind not in ("InsertIntoStatement", "OverwriteByExpression"):
+        return None
+    p = st.plan
+    source = st.sql[p.origin().stopIndex().get() + 1:].strip(" \t\n;")
+    if p.query().nodeName() in ("LocalRelation", "UnresolvedInlineTable"):
+        source = "SELECT * FROM " + source
+    name = st.name(p.table())
+    if st.kind == "OverwriteByExpression":
+        return InsertStmt(name, False, None, {}, source,
+                          st.text(p.deleteExpr()))
+    if p.byName():
+        raise DataSourceException("INSERT ... BY NAME is not supported "
+                                  "on txlog tables")
+    partition = {k: st.opt(v)
+                 for k, v in st.mapping(p.partitionSpec()).items()}
+    return InsertStmt(name, p.overwrite(),
+                      st.items(p.userSpecifiedCols()) or None, partition,
+                      source)
+
+
+def _assignments(st: Statement, seq) -> dict[str, str]:
+    """``c1 = e1, t.c2 = e2`` -> {c1: e1, c2: e2}: target qualifiers
+    dropped, value expressions as written."""
+    return {st.items(a.key().nameParts())[-1]: st.text(a.value())
+            for a in st.items(seq)}
+
+
+def _merge_clause(st: Statement, action):
+    cond = st.opt(action.condition())
+    cond = st.text(cond) if cond is not None else None
+    kind = action.nodeName()
+    if kind == "DeleteAction":
+        return MatchedClause(cond, "delete", None)
+    if kind == "UpdateStarAction":
+        return MatchedClause(cond, "update", None)
+    if kind == "InsertStarAction":
+        return InsertClause(cond, None, None)
+    assigns = _assignments(st, action.assignments())
+    if kind == "UpdateAction":
+        return MatchedClause(cond, "update", assigns)
+    return InsertClause(cond, list(assigns), list(assigns.values()))
+
+
+def parse_merge(st: Statement) -> MergeInto | None:
     """Full Delta MERGE grammar (clause order preserved — the first
     satisfied clause per row wins at execution)."""
-    s = stmt.rstrip().rstrip(";")
-    m = re.match(
-        r"\s*merge\s+(with\s+schema\s+evolution\s+)?into\s+", s, re.I
-    )
-    if not m:
+    if st.kind != "MergeIntoTable":
         return None
-    evolve = bool(m.group(1))
-    pos = m.end()
-    mt = re.compile(IDENT).match(s, pos)
-    if not mt:
-        raise DataSourceException("MERGE INTO: cannot parse target name")
-    target = _norm(mt.group(0))
-    pos = mt.end()
-    u = find_keyword(s, "using", pos)
-    if u < 0:
-        raise DataSourceException("MERGE INTO: missing USING")
-    alias_txt = s[pos:u].strip()
-    target_alias = None
-    if alias_txt:
-        ma = re.fullmatch(r"(?:as\s+)?(\w+)", alias_txt, re.I)
-        if not ma:
-            raise DataSourceException(
-                f"MERGE INTO: cannot parse target alias {alias_txt!r}"
-            )
-        target_alias = ma.group(1)
-    o = find_keyword(s, "on", u + 5)
-    if o < 0:
-        raise DataSourceException("MERGE INTO: missing ON")
-    src_txt = s[u + 5:o].strip()
-    source_alias = None
-    if src_txt.startswith("("):
-        close = find_close_paren(src_txt, 0)
-        if close < 0:
-            raise DataSourceException(
-                f"MERGE INTO: unbalanced source subquery {src_txt[:60]!r}"
-            )
-        tail = src_txt[close + 1:].strip()
-        source_sql = src_txt[:close + 1]
-    else:
-        mt2 = re.match(IDENT, src_txt)
-        if not mt2:
-            raise DataSourceException(
-                f"MERGE INTO: cannot parse source {src_txt[:60]!r}"
-            )
-        source_sql = mt2.group(0)
-        tail = src_txt[mt2.end():].strip()
-    if tail:
-        ma = re.fullmatch(r"(?:as\s+)?(\w+)", tail, re.I)
-        if not ma:
-            raise DataSourceException(
-                f"MERGE INTO: cannot parse source alias {tail!r}"
-            )
-        source_alias = ma.group(1)
-    w = find_keyword(s, "when", o + 2)
-    if w < 0:
-        raise DataSourceException("MERGE INTO: no WHEN clauses")
-    on = s[o + 2:w].strip()
-    clause_region = s[w:]
-    # split on top-level WHEN keywords that OPEN a merge clause — a
-    # lookahead for MATCHED / NOT MATCHED keeps an unparenthesized
-    # CASE WHEN inside a clause condition from splitting the clause
-    mask = structural_mask(clause_region)
-    starts = [
-        m2.start() for m2 in
-        re.finditer(r"(?<![\w`])when(?=\s+(?:matched|not\s+matched)\b)",
-                    clause_region, re.I)
-        if mask[m2.start()]
-    ]
-    matched: list[MatchedClause] = []
-    not_matched: list[InsertClause] = []
-    by_source: list[MatchedClause] = []
-    for i, st in enumerate(starts):
-        end = starts[i + 1] if i + 1 < len(starts) else len(clause_region)
-        kind, parsed = _parse_when_clause(clause_region[st + 4:end])
-        {"matched": matched, "not_matched": not_matched,
-         "by_source": by_source}[kind].append(parsed)
-    if not (matched or not_matched or by_source):
-        raise DataSourceException("MERGE INTO: no WHEN clauses")
-    return MergeInto(target, target_alias, source_sql, source_alias, on,
-                     matched, not_matched, by_source, evolve)
+    p = st.plan
+    target, source = st.items(p.children())
+    source_alias = st.alias(source)
+    body = source.children().apply(0) if source_alias else source
+    source_sql = (st.text(body) if body.nodeName() == "UnresolvedRelation"
+                  else f"({st.query(body)})")
+    return MergeInto(
+        st.name(target), st.alias(target), source_sql, source_alias,
+        st.text(p.mergeCondition()),
+        [_merge_clause(st, a) for a in st.items(p.matchedActions())],
+        [_merge_clause(st, a) for a in st.items(p.notMatchedActions())],
+        [_merge_clause(st, a)
+         for a in st.items(p.notMatchedBySourceActions())],
+        p.withSchemaEvolution(),
+    )
+
+
+def parse_update(st: Statement) -> tuple[str, dict[str, str], str] | None:
+    """``UPDATE t SET c1 = e1, c2 = e2 [WHERE pred]`` ->
+    (target, {col: expr}, predicate); TRUE without a WHERE."""
+    if st.kind != "UpdateTable":
+        return None
+    p = st.plan
+    return (st.name(st.target()), _assignments(st, p.assignments()),
+            st.predicate(st.opt(p.condition())))
 
 
 # -- execution ----------------------------------------------------------
@@ -502,7 +397,7 @@ def execute_create(ds, ct: CreateTable) -> None:
             return
         raise DataSourceException(f"txlog table {ct.name!r} already exists")
     if ct.as_select is not None:
-        df = ds.spark.sql(ds._rewrite_query(ct.as_select))
+        df = ds._query(ct.as_select)
         ds.create(ref, df.schema, partition_by=ct.partition_by)
         if ct.properties:
             ds.set_properties(ref, ct.properties)
@@ -522,7 +417,7 @@ def execute_insert(ds, ins: InsertStmt) -> None:
     snap = resolve_snapshot(table)
     if snap is None:
         raise DataSourceException(f"txlog table {ins.name!r} does not exist")
-    src = ds.spark.sql(ds._rewrite_query(ins.source_sql))
+    src = ds._query(ins.source_sql)
     schema_cols = [f.name for f in snap.schema.fields]
     types = {f.name: f.dataType for f in snap.schema.fields}
     identity = set(snap.identity)
@@ -745,13 +640,10 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
             raise DataSourceException(
                 "MERGE INTO: a subquery source needs an alias"
             )
-        src_df = spark.sql(ds._rewrite_query(src_txt[1:-1]))
+        src_df = ds._query(src_txt[1:-1])
         sa = ms.source_alias
-    elif _norm(src_txt) in ds._known_names():
-        src_df = ds.read(TableRef(table=_norm(src_txt)))
-        sa = ms.source_alias or _last(src_txt)
     else:
-        src_df = spark.sql(ds._rewrite_query(f"SELECT * FROM {src_txt}"))
+        src_df = ds._query(f"SELECT * FROM {src_txt}")
         sa = ms.source_alias or _last(src_txt)
 
     if meta_actions is None:  # API callers pass the already-computed fold
