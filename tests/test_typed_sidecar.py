@@ -14,6 +14,7 @@ millions of files never deserializes an add action.
 
 import json
 import os
+import shutil
 from datetime import date
 from decimal import Decimal
 
@@ -49,26 +50,43 @@ def _mk_rows(lo, hi, part="a"):
     ]
 
 
-def _sidecar_table(spark, ds, tmp_path, monkeypatch, n_batches=3):
+@pytest.fixture(scope="module")
+def sidecar_template(spark, tmp_path_factory):
     """A table whose latest checkpoint is a TYPED sidecar: lowered
     sidecar threshold, CHECKPOINT_INTERVAL appends of disjoint pk
-    ranges (one file each), plus tail commits past the checkpoint."""
+    ranges (one file each), plus tail commits past the checkpoint.
+    Built once per module (22 Spark writes); each test gets its own
+    copy from :func:`_sidecar_table`."""
+    ds = init_datasource("txlog", spark)
+    ref = TableRef(path=str(tmp_path_factory.mktemp("sidecar") / "t"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tx, "CHECKPOINT_PARQUET_MIN", 2)
+        ds.create(ref, T._parse_datatype_string(SCHEMA),
+                  partition_by=["part"])
+        for b in range(CHECKPOINT_INTERVAL + 2):  # 2 tail commits
+            ds.append(
+                spark.createDataFrame(
+                    _mk_rows(b * 10, b * 10 + 5, part=f"p{b % 3}"), SCHEMA
+                ).coalesce(1),
+                ref,
+            )
+    return ref.path
+
+
+def _sidecar_table(template, tmp_path, monkeypatch):
+    """A private copy of the sidecar table (file paths in the log are
+    table-relative; ``shutil.copy`` gives the copies fresh mtimes, as
+    a just-built table has), with the lowered sidecar threshold in
+    force for the test's own commits."""
     monkeypatch.setattr(tx, "CHECKPOINT_PARQUET_MIN", 2)
-    ref = TableRef(path=str(tmp_path / "t"))
-    ds.create(ref, T._parse_datatype_string(SCHEMA),
-              partition_by=["part"])
-    for b in range(CHECKPOINT_INTERVAL + 2):  # 2 tail commits
-        ds.append(
-            spark.createDataFrame(
-                _mk_rows(b * 10, b * 10 + 5, part=f"p{b % 3}"), SCHEMA
-            ).coalesce(1),
-            ref,
-        )
-    return ref
+    path = str(tmp_path / "t")
+    shutil.copytree(template, path, copy_function=shutil.copy)
+    return TableRef(path=path)
 
 
-def test_typed_sidecar_columns_written(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_sidecar_columns_written(spark, ds, sidecar_template, tmp_path,
+                                       monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     log = os.path.join(ref.path, "_txlog")
     _, checkpoints = _list_log(ref.path)
     with open(os.path.join(log, checkpoints[-1])) as fh:
@@ -96,9 +114,9 @@ def test_typed_sidecar_columns_written(spark, ds, tmp_path, monkeypatch):
             assert r["min::price"] == str(mins["price"])
 
 
-def test_snapshot_is_lazy_and_mapping_complete(spark, ds, tmp_path,
-                                               monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_snapshot_is_lazy_and_mapping_complete(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     snap = resolve_snapshot(ref.path)
     files = snap.files
     assert isinstance(files, LazyAdds)
@@ -116,12 +134,12 @@ def test_snapshot_is_lazy_and_mapping_complete(spark, ds, tmp_path,
     assert set(dict(files)) == set(files)
 
 
-def test_zero_candidate_delete_never_parses_adds(spark, ds, tmp_path,
-                                                 monkeypatch):
+def test_zero_candidate_delete_never_parses_adds(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """The scale win, pinned: a DELETE whose predicate prunes to zero
     candidates completes without deserializing a single add action —
     candidate selection ran entirely on the typed sidecar columns."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
 
     def boom(self):
         raise AssertionError("add dicts materialized on a "
@@ -134,11 +152,11 @@ def test_zero_candidate_delete_never_parses_adds(spark, ds, tmp_path,
     assert ds.read(ref).count() == before
 
 
-def test_pruning_reads_are_column_pruned(spark, ds, tmp_path,
+def test_pruning_reads_are_column_pruned(spark, ds, sidecar_template, tmp_path,
                                          monkeypatch):
     """Candidate selection reads the SIDECAR, not the JSON log, and
     only the columns the predicate needs — never add_json."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     snap = resolve_snapshot(ref.path)
     import pyarrow.parquet as pq
 
@@ -188,8 +206,9 @@ PREDICATES = [
 ]
 
 
-def test_typed_and_dict_pruning_agree(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_and_dict_pruning_agree(spark, ds, sidecar_template, tmp_path,
+                                      monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
     twin = _dict_twin(lazy)
     for pred in PREDICATES:
@@ -198,9 +217,9 @@ def test_typed_and_dict_pruning_agree(spark, ds, tmp_path, monkeypatch):
         assert a == b, f"typed/dict divergence for {pred!r}"
 
 
-def test_typed_and_dict_key_overlap_agree(spark, ds, tmp_path,
-                                          monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_and_dict_key_overlap_agree(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
     twin = _dict_twin(lazy)
     sources = {
@@ -220,11 +239,11 @@ def test_typed_and_dict_key_overlap_agree(spark, ds, tmp_path,
     assert len(ds._files_overlapping_keys(sources["pk"], lazy, "pk")) == 5
 
 
-def test_delete_correct_through_typed_plane(spark, ds, tmp_path,
-                                            monkeypatch):
+def test_delete_correct_through_typed_plane(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """End-to-end: a point DELETE on a sidecar-backed table rewrites
     only the one candidate file and removes exactly the row."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     before = {p: a for p, a in resolve_snapshot(ref.path).files.items()}
     n0 = ds.read(ref).count()
     ds.delete(ref, "pk = 3")
@@ -236,10 +255,10 @@ def test_delete_correct_through_typed_plane(spark, ds, tmp_path,
 
 
 def test_pre_typed_sidecar_still_resolves_and_upgrades(
-        spark, ds, tmp_path, monkeypatch):
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """A sidecar from the pre-typed layout (add_json only) still
     resolves — and clean_log's floor refresh upgrades it in place."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     log = os.path.join(ref.path, "_txlog")
     _, checkpoints = _list_log(ref.path)
     with open(os.path.join(log, checkpoints[-1])) as fh:
@@ -266,10 +285,11 @@ def test_pre_typed_sidecar_still_resolves_and_upgrades(
     assert ds.read(ref).count() == n * 5
 
 
-def test_tail_overrides_fold_into_meta(spark, ds, tmp_path, monkeypatch):
+def test_tail_overrides_fold_into_meta(spark, ds, sidecar_template, tmp_path,
+                                       monkeypatch):
     """Post-checkpoint commits (adds AND removes) are visible through
     the columnar metadata plane without a new checkpoint."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     # tail add: a fresh pk range far outside every sidecar file
     ds.append(
         spark.createDataFrame(_mk_rows(900, 905, part="p9"), SCHEMA)
@@ -287,9 +307,9 @@ def test_tail_overrides_fold_into_meta(spark, ds, tmp_path, monkeypatch):
     assert ds._files_matching_predicate(ref.path, snap2, "pk = 901") == []
 
 
-def test_partition_values_prune_from_typed_columns(spark, ds, tmp_path,
-                                                   monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_partition_values_prune_from_typed_columns(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     snap = resolve_snapshot(ref.path)
     got = ds._files_matching_predicate(ref.path, snap, "part = 'p1'")
     pvs = {
@@ -304,11 +324,11 @@ def test_partition_values_prune_from_typed_columns(spark, ds, tmp_path,
     assert len(got) == n_p1
 
 
-def test_replace_where_overwrite_on_sidecar_table(spark, ds, tmp_path,
-                                                  monkeypatch):
+def test_replace_where_overwrite_on_sidecar_table(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """The reference's flagship overwrite shape (partition-scoped
     replaceWhere, etl/overwrite.py:27-33) through the typed plane."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     n0 = ds.read(ref).count()
     other = ds.read(ref).filter("part <> 'p1'").count()
     repl = spark.createDataFrame(_mk_rows(5000, 5003, part="p1"), SCHEMA)
@@ -327,11 +347,12 @@ def _cands(ds, ref, pred):
     return ds._files_matching_predicate(ref.path, snap, pred)
 
 
-def test_or_pruning_point_disjuncts(spark, ds, tmp_path, monkeypatch):
+def test_or_pruning_point_disjuncts(spark, ds, sidecar_template, tmp_path,
+                                    monkeypatch):
     """The reference's own generated replaceWhere shape — OR of
     per-partition-tuple equalities (etl/overwrite.py:27-33) — prunes:
     a file is excluded when EVERY disjunct is provably false."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     got = _cands(ds, ref, "pk = 3 OR pk = 47")
     # pk=3 -> file [0,4]; pk=47 falls in no file's [min,max]
     assert len(got) == 1
@@ -341,8 +362,9 @@ def test_or_pruning_point_disjuncts(spark, ds, tmp_path, monkeypatch):
     assert len(got) == 1
 
 
-def test_or_pruning_mixed_and_or_nesting(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_or_pruning_mixed_and_or_nesting(spark, ds, sidecar_template, tmp_path,
+                                         monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     got = _cands(
         ds, ref,
         "(pk < 5 AND name = 'n0001') OR (pk >= 100 AND pk < 105)",
@@ -356,11 +378,11 @@ def test_or_pruning_mixed_and_or_nesting(spark, ds, tmp_path, monkeypatch):
     assert len(got) == 4  # [0,4], [10,14] + the two name-range files
 
 
-def test_or_pruning_unparsable_branch_disables(spark, ds, tmp_path,
-                                               monkeypatch):
+def test_or_pruning_unparsable_branch_disables(
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """A disjunct stats cannot falsify (IS NULL, functions, NULL
     literals) poisons the whole OR — every file stays a candidate."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     snap = resolve_snapshot(ref.path)
     n = len(snap.files)
     assert len(_cands(ds, ref, "pk = 3 OR pk IS NULL")) == n
@@ -375,10 +397,11 @@ def test_or_pruning_unparsable_branch_disables(spark, ds, tmp_path,
     assert pvs == {"p0", "p1"}
 
 
-def test_or_pruning_delete_end_to_end(spark, ds, tmp_path, monkeypatch):
+def test_or_pruning_delete_end_to_end(spark, ds, sidecar_template, tmp_path,
+                                      monkeypatch):
     """Correctness under the new skipping: OR-predicate DELETE removes
     exactly the matching rows and rewrites only candidate files."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     before = ds.read(ref).collect()
     expect_gone = {r.pk for r in before if r.pk < 5 or r.pk >= 200}
     files_before = set(resolve_snapshot(ref.path).files)
@@ -390,8 +413,9 @@ def test_or_pruning_delete_end_to_end(spark, ds, tmp_path, monkeypatch):
     assert len(files_before - files_after) == 3
 
 
-def test_or_pruning_typed_and_dict_agree(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_or_pruning_typed_and_dict_agree(spark, ds, sidecar_template, tmp_path,
+                                         monkeypatch):
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
     twin = _dict_twin(lazy)
     for pred in [
@@ -427,12 +451,12 @@ def test_partition_only_predicate_precheck():
 
 
 def test_non_partition_predicate_skips_jvm_partition_eval(
-        spark, ds, tmp_path, monkeypatch):
+        spark, ds, sidecar_template, tmp_path, monkeypatch):
     """A predicate over non-partition columns must take the no-pruning
     path WITHOUT evaluating against a partition-tuple frame (pre-fix
     that evaluation failed analysis and logged an ERROR stack trace
     per occurrence)."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     snap = resolve_snapshot(ref.path)
     stats_only = ds._files_matching_predicate(ref.path, snap, "pk = 3")
 
