@@ -29,11 +29,11 @@ it into the plain values the executors below consume:
   ``TxLogDataSource.update``).
 
 Scale shape of the merge executor: candidate files are pruned by
-footer key-range overlap before anything is read; the single
-target-slice x source full-outer join is localCheckpoint-pinned and
-feeds EVERY downstream job (ambiguity check, no-op probe, the table
-write, and the 4-type change-feed rows) — one join total, cost tracks
-the candidate slice, never the table.
+footer key-range overlap before anything is read; one target-slice x
+source full-outer join, staged by one SQL projection, streams straight
+into the table write. It is localCheckpoint-pinned only when a second
+job reads it (the change-feed rows, the multiple-match check) — one
+join total, cost tracks the candidate slice, never the table.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.errors import ParseException
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from x_spark.errors import DataSourceException
 from x_spark.sources.base import TableRef
@@ -596,6 +596,42 @@ def merge_spec_into(spec, sa: str = "SRC", ta: str = "TGT") -> MergeInto:
     return MergeInto("", ta, "", sa, on, matched, not_matched, [])
 
 
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backticked SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dt) -> str:
+    """Spark SQL spelling of a PySpark ``DataType``, for a CAST inside
+    SQL text (``simpleString`` leaves struct field names unquoted and
+    spells the session-dependent ``timestamp``)."""
+    from pyspark.sql.types import (
+        ArrayType, MapType, StructType, TimestampType,
+    )
+
+    if isinstance(dt, StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote_ident(f.name)}: {sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    if isinstance(dt, TimestampType):
+        return "TIMESTAMP_LTZ"
+    return dt.simpleString()
+
+
+def _codes(codes) -> str:
+    """SQL IN-list of clause codes; ``NULL`` for none, so ``__code IN
+    (NULL)`` matches no row."""
+    return ", ".join(f"'{c}'" for c in codes) or "NULL"
+
+
 def _merge_into_once(ds, ms: MergeInto, table: str,
                      txn: tuple[str, int] | None = None,
                      src_df: DataFrame | None = None,
@@ -607,15 +643,40 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                      src_key_bounds: tuple | None = None) -> None:
     """One merge attempt against the current (or given) snapshot.
 
+    The target slice (key-pruned candidate files) full-outer joins the
+    source once. One ``selectExpr`` of SQL text over the aliased join
+    stages every row: ``__code`` names the clause that fired (``m<i>``
+    matched, ``i<i>`` insert, ``s<i>`` not matched by source, else
+    ``keep`` for an untouched target row and ``drop`` for an unused
+    source row), and each target column holds the row's written image
+    — update assignments and insert images are CASE arms over the old
+    value. The written rows are the one branch ``__code NOT IN
+    (<delete codes>, 'drop')``, streamed straight into
+    ``_write_files``.
+
+    A ``DataFrame.observe`` count of touched rows (updated, inserted or
+    deleted) rides the first job over the staged rows. Zero touched
+    rows is a logical no-op and commits nothing: a rewrite would only
+    churn files and emit spurious delete+insert change-feed pairs for
+    co-located surviving rows. Unpinned, that first job is the table
+    write, and ``_write_files`` discards the staged files before
+    publishing them.
+
+    The staged rows are pinned (``_tracked_local_ckpt``) only when a
+    second job reads them: the change-feed write (CDF on) or the
+    multiple-match check (``skip_match_checks`` False with a WHEN
+    MATCHED clause). Identity allocation pins the written rows itself.
+    Otherwise the join runs once, inside the write job.
+
     ``src_df``/``snap`` short-circuit resolution for API callers that
     already hold them (the MergeSpec path); ``skip_match_checks``
     drops the multiple-match guard AND the per-target-row residue
     dedup when the caller has already guaranteed unique source keys
-    on an equi ON (one less shuffle). ``txn`` stamps the commit for
-    idempotent replay. ``src_key_bounds`` is ``(source key column,
-    min, max)`` when the caller already measured the source key range
-    in a fused pass — the candidate pruning then skips its own
-    source-plan job (used only if the extracted equi key matches)."""
+    on an equi ON. ``txn`` stamps the commit for idempotent replay.
+    ``src_key_bounds`` is ``(source key column, min, max)`` when the
+    caller already measured the source key range in a fused pass —
+    the candidate pruning then skips its own source-plan job (used
+    only if the extracted equi key matches)."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -657,7 +718,7 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         else:
             write_schema = snap.schema
     tgt_cols = [f.name for f in write_schema.fields]
-    types = {f.name: f.dataType for f in write_schema.fields}
+    types = {f.name: sql_type(f.dataType) for f in write_schema.fields}
     src_cols = src_df.columns
 
     # identity guard: no clause may assign or insert an identity column
@@ -687,7 +748,8 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         # EXACTLY the rows pruning would skip (Delta disables file
         # pruning the same way), so it forces the full candidate set
         tcol, scol = key
-        keyed = src_df.select(F.col(scol).alias(tcol))
+        keyed = src_df.selectExpr(
+            f"{quote_ident(scol)} AS {quote_ident(tcol)}")
         candidates = ds._files_overlapping_keys(
             keyed, snap, tcol,
             bounds=(src_key_bounds[1], src_key_bounds[2])
@@ -696,6 +758,8 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         )
     else:
         candidates = sorted(snap.files)
+    if not candidates and not ms.not_matched:
+        return  # no target row to touch and no insert clause: a no-op
 
     # id-aware when row tracking is on: carried target rows (kept AND
     # updated) keep their stable _x_row_id in the rewritten files
@@ -703,239 +767,182 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
     carry = [c for c in ("_x_row_id", "_x_rcv") if c in tslice.columns]
     if meta_actions:
         tslice = ds._widen_frame(tslice, write_schema)
-    t = (tslice.withColumn("__t", F.lit(True))
-         .withColumn("__trid", F.monotonically_increasing_id())
-         .alias(ta))
-    s = src_df.withColumn("__s", F.lit(True)).alias(sa)
+    cdf = ds._cdf_enabled(snap.configuration)
+    checks = not skip_match_checks
+    # per-row ids only feed the multiple-match check and residue dedup
+    rid = ["monotonically_increasing_id() AS __rid"] if checks else []
+    t = tslice.selectExpr("*", "true AS __t", *rid).alias(ta)
+    s = src_df.selectExpr("*", "true AS __s", *rid).alias(sa)
+    T, S = quote_ident(ta), quote_ident(sa)
     joined = t.join(s, F.expr(ms.on), "full_outer")
 
-    def csat(c: str | None):
-        return (F.coalesce(F.expr(c), F.lit(False)) if c is not None
-                else F.lit(True))
+    def fired(cond: str | None) -> str:
+        return "" if cond is None else f" AND coalesce(({cond}), false)"
 
-    is_matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    tgt_only = F.col("__t").isNotNull() & F.col("__s").isNull()
-    src_only = F.col("__t").isNull() & F.col("__s").isNotNull()
-    code = None
+    arms: list[str] = []
     upd_assign: dict[str, dict[str, str]] = {}   # code -> assignments
     del_codes: list[str] = []
     ins_specs: dict[str, InsertClause] = {}
-    matched_codes: list[str] = []
-
-    def chain(prev, cond, val):
-        return F.when(cond, F.lit(val)) if prev is None else \
-            prev.when(cond, F.lit(val))
-
-    for i, cl in enumerate(ms.matched):
-        c = f"m{i}"
-        matched_codes.append(c)
-        code = chain(code, is_matched & csat(cl.condition), c)
+    matched_codes = [f"m{i}" for i in range(len(ms.matched))]
+    for c, cl in zip(matched_codes, ms.matched):
+        arms.append(f"WHEN __t IS NOT NULL AND __s IS NOT NULL"
+                    f"{fired(cl.condition)} THEN '{c}'")
         if cl.action == "delete":
             del_codes.append(c)
         else:
             assigns = cl.assignments
             if assigns is None:  # UPDATE SET * (identity cols excluded)
-                assigns = {x: f"{sa}.{x}" for x in tgt_cols
+                assigns = {x: f"{S}.{quote_ident(x)}" for x in tgt_cols
                            if x in src_cols and x not in ident}
             upd_assign[c] = assigns
     for i, cl in enumerate(ms.not_matched):
         c = f"i{i}"
-        code = chain(code, src_only & csat(cl.condition), c)
+        arms.append(f"WHEN __t IS NULL AND __s IS NOT NULL"
+                    f"{fired(cl.condition)} THEN '{c}'")
         ins_specs[c] = cl
     for i, cl in enumerate(ms.by_source):
         c = f"s{i}"
-        code = chain(code, tgt_only & csat(cl.condition), c)
+        arms.append(f"WHEN __t IS NOT NULL AND __s IS NULL"
+                    f"{fired(cl.condition)} THEN '{c}'")
         if cl.action == "delete":
             del_codes.append(c)
         else:
             upd_assign[c] = cl.assignments or {}
-    keep_or_drop = F.when(F.col("__t").isNotNull(),
-                          F.lit("keep")).otherwise(F.lit("drop"))
-    code = code.otherwise(keep_or_drop) if code is not None else keep_or_drop
+    code = (f"CASE {' '.join(arms)} WHEN __t IS NOT NULL THEN 'keep' "
+            "ELSE 'drop' END AS __code")
     upd_codes = sorted(upd_assign)
     ins_codes = sorted(ins_specs)
     defaults = snap.defaults
 
-    def new_val(c: str):
-        """Post-update image of target column ``c`` (old value for
-        keep / non-assigning clauses)."""
-        e = None
-        for uc in upd_codes:
-            a = upd_assign[uc]
-            if c in a:
-                cexpr = F.expr(a[c]).cast(types[c])
-                e = (F.when(F.col("__code") == uc, cexpr) if e is None
-                     else e.when(F.col("__code") == uc, cexpr))
-        basec = F.col(f"{ta}.{c}").cast(types[c])
-        return (e.otherwise(basec) if e is not None else basec)
+    def ins_val(cl: InsertClause, c: str) -> str | None:
+        """Insert image of column ``c`` for one insert clause: listed
+        expression > INSERT * by-name > DEFAULT > NULL (None). Identity
+        columns stay NULL (the dense allocator fills them)."""
+        if c in ident:
+            return None
+        if cl.columns is None:  # INSERT *
+            if c in src_cols:
+                return f"{S}.{quote_ident(c)}"
+        elif c in cl.columns:
+            return cl.values[cl.columns.index(c)]
+        return defaults.get(c)
 
-    def ins_val(c: str):
-        """Insert image of column ``c``, per firing insert clause:
-        listed expression > INSERT * by-name > DEFAULT > NULL.
-        Identity columns stay NULL (the dense allocator fills them)."""
-        e = None
-        for ic in ins_codes:
-            cl = ins_specs[ic]
-            if c in ident:
-                cexpr = F.lit(None).cast(types[c])
-            elif cl.columns is None:  # INSERT *
-                if c in src_cols:
-                    cexpr = F.col(f"{sa}.{c}").cast(types[c])
-                elif c in defaults:
-                    cexpr = F.expr(defaults[c]).cast(types[c])
-                else:
-                    cexpr = F.lit(None).cast(types[c])
-            elif c in cl.columns:
-                cexpr = F.expr(cl.values[cl.columns.index(c)]).cast(types[c])
-            elif c in defaults:
-                cexpr = F.expr(defaults[c]).cast(types[c])
-            else:
-                cexpr = F.lit(None).cast(types[c])
-            e = (F.when(F.col("__code") == ic, cexpr) if e is None
-                 else e.when(F.col("__code") == ic, cexpr))
-        return e if e is not None else F.lit(None).cast(types[c])
+    def image(c: str) -> str:
+        """Written image of target column ``c``: the firing clause's
+        assignment or insert value, else the old value (NULL on an
+        inserted row, whose target side is empty)."""
+        vals = [(uc, upd_assign[uc].get(c)) for uc in upd_codes]
+        vals += [(ic, ins_val(ins_specs[ic], c)) for ic in ins_codes]
+        when = " ".join(f"WHEN '{k}' THEN CAST(({v}) AS {types[c]})"
+                        for k, v in vals if v is not None)
+        old = f"CAST({T}.{quote_ident(c)} AS {types[c]})"
+        body = f"CASE __code {when} ELSE {old} END" if when else old
+        return f"{body} AS {quote_ident(c)}"
 
-    # Evaluate EVERY alias-qualified expression here, against the
-    # joined frame (the only place the aliases resolve — the local
-    # checkpoint below erases qualifiers), into disambiguated
-    # __old_/__new_/__ins_ columns. This staged projection is what
-    # gets pinned; every downstream job reads the pin.
-    staged = joined.withColumn("__code", code).select(
-        F.col("__code"),
-        F.col("__t"),
-        F.col("__trid"),
-        *[F.col(f"{ta}.{c}").cast(types[c]).alias(f"__old_{c}")
-          for c in tgt_cols],
-        *[F.col(f"{ta}.{c}").alias(f"__old_{c}") for c in carry],
-        *[new_val(c).alias(f"__new_{c}") for c in tgt_cols],
-        *([ins_val(c).alias(f"__ins_{c}") for c in tgt_cols]
-          if ins_codes else []),
+    staged_cols = ["__code"]
+    if checks:
+        # source-only rows get their own negative id, so the residue
+        # dedup window never lumps the inserts into one partition
+        staged_cols.append(f"coalesce({T}.__rid, -1 - {S}.__rid) AS __rid")
+    if cdf:
+        staged_cols += [f"CAST({T}.{quote_ident(c)} AS {types[c]}) "
+                        f"AS {quote_ident('__old_' + c)}" for c in tgt_cols]
+    staged_cols += [image(c) for c in tgt_cols]
+    if "_x_row_id" in carry:
+        staged_cols.append(f"{T}._x_row_id AS _x_row_id")
+    if "_x_rcv" in carry:
+        # updated rows fall back to the new file's default commit
+        # version; kept rows carry their old one
+        staged_cols.append(f"CASE WHEN __code IN ({_codes(upd_codes)}) "
+                           f"THEN NULL ELSE {T}._x_rcv END AS _x_rcv")
+    staged, touched = ds._observe_count(
+        joined.selectExpr("*", code).selectExpr(*staged_cols),
+        "__code NOT IN ('keep', 'drop')",
     )
-    work, ckpts = ds._tracked_local_ckpt(staged)
+    pin = cdf or (checks and bool(matched_codes))
+    ckpts: list = []
     ck2: list = []
     try:
-        # Delta's multiple-match rule: a target row matched by more
-        # than one source row may be modified by at most one of them
-        if matched_codes and not skip_match_checks:
-            dup = (
-                work.filter(F.col("__code").isin(matched_codes))
-                .groupBy("__trid").count().filter(F.col("count") > 1)
-                .limit(1).count()
-            )
-            if dup:
-                raise DataSourceException(
-                    "MERGE INTO: multiple source rows matched and "
-                    "attempted to modify the same target row"
+        work = staged
+        if pin:
+            work, ckpts = ds._tracked_local_ckpt(staged)
+            # Delta's multiple-match rule: a target row matched by
+            # more than one source row may be modified by at most one
+            if checks and matched_codes:
+                dup = (
+                    work.where(f"__code IN ({_codes(matched_codes)})")
+                    .groupBy("__rid").count().where("count > 1")
+                    .limit(1).count()
                 )
-        # logical no-op probe: zero modified/inserted/deleted rows =>
-        # no rewrite, no commit (a rewrite here would emit spurious
-        # delete+insert CDF pairs for co-located surviving rows)
-        touched = (
-            work.filter(~F.col("__code").isin(["keep", "drop"]))
-            .limit(1).count()
-        )
-        if touched == 0:
-            return
-
-        # per-target-row residue dedup: a row matched by several
-        # sources where at most one clause fired keeps ONE image —
-        # the modifying one when present, else a single kept copy.
-        # Skipped when the caller guarantees unique source keys on an
-        # equi ON (a target row then matches at most once).
-        t_rows = work.filter(F.col("__t").isNotNull())
-        if not skip_match_checks:
-            wspec = Window.partitionBy("__trid").orderBy(
-                F.when(F.col("__code") == "keep",
-                       F.lit(1)).otherwise(F.lit(0))
-            )
-            t_rows = (t_rows.withColumn("__rn", F.row_number().over(wspec))
-                      .filter(F.col("__rn") == 1))
-
-        survivors = (t_rows.filter(~F.col("__code").isin(del_codes))
-                     if del_codes else t_rows)
-        new_t = survivors.select(
-            F.col("__code"),
-            *[F.col(f"__new_{c}").alias(c) for c in tgt_cols],
-            *[F.col(f"__old_{c}").alias(c) for c in carry],
-        )
-        if "_x_rcv" in carry:
-            # updated rows fall back to the new file's default commit
-            # version; kept rows carry their old one
-            upd_f = (F.col("__code").isin(upd_codes) if upd_codes
-                     else F.lit(False))
-            new_t = new_t.withColumn(
-                "_x_rcv",
-                F.when(upd_f, F.lit(None).cast("long"))
-                .otherwise(F.col("_x_rcv")),
-            )
-        # generated columns not assigned by the firing update clause
-        # recompute from the POST-assignment values (Delta's rule)
+                if dup:
+                    raise DataSourceException(
+                        "MERGE INTO: multiple source rows matched and "
+                        "attempted to modify the same target row"
+                    )
+            if ds._observed_zero(touched):
+                return
+        rows = work
+        if checks:
+            # per-target-row residue dedup: a row matched by several
+            # sources where at most one clause fired keeps ONE image —
+            # the modifying one when present, else a single kept copy
+            rows = rows.selectExpr(
+                "*", "row_number() OVER (PARTITION BY __rid ORDER BY "
+                "CASE WHEN __code = 'keep' THEN 1 ELSE 0 END) AS __rn",
+            ).where("__rn = 1")
+        out = rows.where(f"__code NOT IN ({_codes(del_codes + ['drop'])})")
+        out_cols = ["__code", *tgt_cols, *carry]
         for g, gexpr in sorted(snap.generated.items()):
             if g not in tgt_cols:
                 continue
+            # generated columns not assigned by the firing update
+            # clause recompute from the POST-assignment values (Delta's
+            # rule); on inserted rows NULL means "not set" (explicit
+            # disagreeing values still fail the generated:<col> check
+            # at the write choke point)
+            gen, q = f"CAST(({gexpr}) AS {types[g]})", quote_ident(g)
             regen_in = [uc for uc in upd_codes if g not in upd_assign[uc]]
-            if regen_in:
-                new_t = new_t.withColumn(
-                    g,
-                    F.when(F.col("__code").isin(regen_in),
-                           F.expr(gexpr).cast(types[g]))
-                    .otherwise(F.col(g)),
-                )
-
-        if ins_codes:
-            ins_proj = work.filter(F.col("__code").isin(ins_codes)).select(
-                *[F.col(f"__ins_{c}").alias(c) for c in tgt_cols]
-            )
-            # generated columns on inserted rows: NULL means "not set"
-            # — compute the expression (explicit disagreeing values
-            # still fail the generated:<col> check at the choke point)
-            for g, gexpr in sorted(snap.generated.items()):
-                if g in tgt_cols:
-                    ins_proj = ins_proj.withColumn(
-                        g,
-                        F.when(F.col(g).isNull(),
-                               F.expr(gexpr).cast(types[g]))
-                        .otherwise(F.col(g)),
-                    )
-            ins_rows = ins_proj
-            if snap.identity:
-                ins_rows, ck2 = ds._allocate_identity_for_nulls(
-                    ins_rows, snap)
-        else:
-            ins_rows = None
-
-        result = new_t.select(*tgt_cols, *carry)
-        if ins_rows is not None:
-            ins_out = ins_rows
-            for c in carry:  # fresh rows: ids come from baseRowId
-                ins_out = ins_out.withColumn(c, F.lit(None).cast("long"))
-            result = result.unionByName(ins_out)
-        adds = ds._write_files(result, table, snap.partition_cols,
-                               schema=write_schema)
+            out = out.selectExpr(*[
+                f"CASE WHEN __code IN ({_codes(regen_in)}) THEN {gen} "
+                f"WHEN __code IN ({_codes(ins_codes)}) AND {q} IS NULL "
+                f"THEN {gen} ELSE {q} END AS {q}"
+                if c == g else quote_ident(c) for c in out_cols
+            ])
+        if snap.identity and ins_codes:
+            out, ck2 = ds._allocate_identity_for_nulls(out, snap)
+        adds = ds._write_files(
+            out.selectExpr(*[quote_ident(c) for c in tgt_cols + carry]),
+            table, snap.partition_cols, schema=write_schema,
+            touched=None if pin else touched,
+        )
+        if adds is None:
+            return
         actions = list(ds._fold_identity_meta(
             snap, adds, write_schema, meta_actions))
         actions += [{"remove": {"path": p}} for p in candidates]
         actions += [{"add": a} for a in adds]
-        if ds._cdf_enabled(snap.configuration):
-            old_img = [F.col(f"__old_{c}").alias(c) for c in tgt_cols]
-            upd_filter = (F.col("__code").isin(upd_codes) if upd_codes
-                          else F.lit(False))
-            del_filter = (F.col("__code").isin(del_codes) if del_codes
-                          else F.lit(False))
-            pre = (t_rows.filter(upd_filter).select(*old_img)
-                   .withColumn("_change_type", F.lit("update_preimage")))
-            post = (new_t.filter(upd_filter).select(*tgt_cols)
-                    .withColumn("_change_type",
-                                F.lit("update_postimage")))
-            dels = (t_rows.filter(del_filter).select(*old_img)
-                    .withColumn("_change_type", F.lit("delete")))
-            cdc = pre.unionByName(post).unionByName(dels)
-            if ins_rows is not None:
-                cdc = cdc.unionByName(
-                    ins_rows.withColumn("_change_type", F.lit("insert"))
-                )
-            actions += ds._write_cdc_files(cdc, table, write_schema,
-                                           snap.partition_cols)
+        if cdf:
+            # pre-images and deletes from the staged old values; post
+            # images and inserts from the written rows (generated
+            # columns and allocated identities included)
+            upd = _codes(upd_codes)
+            pre = work.where(
+                f"__code IN ({_codes(upd_codes + del_codes)})"
+            ).selectExpr(
+                *[f"{quote_ident('__old_' + c)} AS {quote_ident(c)}"
+                  for c in tgt_cols],
+                f"CASE WHEN __code IN ({upd}) THEN 'update_preimage' "
+                "ELSE 'delete' END AS _change_type",
+            )
+            post = out.where(
+                f"__code IN ({_codes(upd_codes + ins_codes)})"
+            ).selectExpr(
+                *[quote_ident(c) for c in tgt_cols],
+                f"CASE WHEN __code IN ({upd}) THEN 'update_postimage' "
+                "ELSE 'insert' END AS _change_type",
+            )
+            actions += ds._write_cdc_files(pre.unionByName(post), table,
+                                           write_schema, snap.partition_cols)
         ds._commit(table, ds._expect_unchanged(table, base), actions,
                    "MERGE", txn=txn)
     finally:

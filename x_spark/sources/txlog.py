@@ -57,13 +57,13 @@ import shutil
 import uuid
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from x_spark.errors import DataSourceException, ETLJobException
 from x_spark.sources.base import BaseDataSource, MergeSpec, TableRef
 from x_spark.sources import sql_dml
-from x_spark.sources.sql_dml import Statement
+from x_spark.sources.sql_dml import Statement, quote_ident, sql_type
 
 LOG_DIR = "_txlog"
 CHECKPOINT_INTERVAL = 20
@@ -347,8 +347,9 @@ def _conform(df: DataFrame, schema: StructType) -> DataFrame:
     Delta's assignment cast (a NULL-typed ``null as c`` literal or a
     compatible numeric narrows/widens; a missing column is a hard
     error via the unresolved reference)."""
-    return df.select(*[
-        F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields
+    return df.selectExpr(*[
+        f"CAST({quote_ident(f.name)} AS {sql_type(f.dataType)}) "
+        f"AS {quote_ident(f.name)}" for f in schema.fields
     ])
 
 
@@ -2025,14 +2026,21 @@ class TxLogDataSource(BaseDataSource):
         parts: list[DataFrame] = []
         if plain:
             # column mapping: files store physical names; scan with the
-            # physical schema, alias back to logical (identity when off)
-            parts.append(
+            # physical schema, alias back to logical. Unmapped, the scan
+            # already has the logical names — project only when the
+            # partition columns (which the scan puts last) must move.
+            scan = (
                 self.spark.read.schema(_physical_schema(snap.schema))
                 .option("basePath", table)
                 .parquet(*[os.path.join(table, p) for p in plain])
-                .select(*[F.col(_physical_name(f)).alias(f.name)
-                          for f in snap.schema.fields])
             )
+            phys = [_physical_name(f) for f in snap.schema.fields]
+            if not phys == cols == scan.columns:
+                scan = scan.selectExpr(*[
+                    f"{quote_ident(p)} AS {quote_ident(c)}"
+                    for p, c in zip(phys, cols)
+                ])
+            parts.append(scan)
         if masked:
             df = self._read_files_with_meta(table, snap.schema, masked)
             mask = self._dv_rows(table, snap, masked)
@@ -2646,21 +2654,31 @@ class TxLogDataSource(BaseDataSource):
                      part_cols: list[str],
                      schema: StructType | None = None,
                      config_override: dict[str, str] | None = None,
-                     ) -> list[dict]:
+                     touched: Observation | None = None,
+                     ) -> list[dict] | None:
         """Materialize ``df`` as immutable parquet files inside the
         table directory (staged under a unique name, then moved — the
         files are invisible until an add action commits them). Returns
         add-actions with footer row counts and per-column min/max.
 
+        ``touched`` is a :meth:`_observe_count` observation riding
+        ``df``'s plan that counts the rows the operation changes. It is
+        read after the write job; when it is 0 the staged files are
+        discarded before publishing and None is returned, so the
+        caller commits nothing (a logical no-op).
+
         CHECK constraints (``constraint.<name>`` configuration keys)
         are enforced HERE — the one choke point every write path
         (append/overwrite/dynamic/merge/compact/cluster/SCD) funnels
-        through — before any file lands: a violating row aborts the
-        whole transaction with the constraint name and an example row
-        (Delta's InvariantViolationException shape). SQL semantics: a
-        row violates only when the expression is FALSE (NULL passes,
-        the standard CHECK rule); cost is one validation job per
-        write, and only when constraints exist.
+        through — after the staged write and before any file is
+        published: a violating row aborts the whole transaction with
+        the constraint name and an example row (Delta's
+        InvariantViolationException shape). SQL semantics: a row
+        violates only when the expression is FALSE (NULL passes, the
+        standard CHECK rule); cost is one validation job per write,
+        and only when constraints exist. The check runs after the
+        write so the write job is the first over ``df``'s plan — the
+        one a ``touched`` count observes in full.
 
         Column mapping: constraints/generated columns validate on the
         LOGICAL df, then columns rename to their stable physical names
@@ -2670,20 +2688,24 @@ class TxLogDataSource(BaseDataSource):
         translate logical->physical at lookup (identity for unmapped
         tables). ``schema`` supplies the mapping.
         """
-        self._enforce_constraints(df, table, config_override)
         phys = _physical_map(schema) if schema is not None else {}
+        out = df
         if any(phys.get(c, c) != c for c in df.columns):
-            df = df.select(
-                *[F.col(c).alias(phys.get(c, c)) for c in df.columns]
-            )
+            out = df.selectExpr(*[
+                f"{quote_ident(c)} AS {quote_ident(phys.get(c, c))}"
+                for c in df.columns
+            ])
         write_part_cols = [phys.get(c, c) for c in part_cols]
         staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if write_part_cols:
-            writer = writer.partitionBy(*write_part_cols)
-        writer.parquet(staging)
         adds: list[dict] = []
         try:
+            writer = out.write.mode("overwrite")
+            if write_part_cols:
+                writer = writer.partitionBy(*write_part_cols)
+            writer.parquet(staging)
+            if touched is not None and self._observed_zero(touched):
+                return None
+            self._enforce_constraints(df, table, config_override)
             staged: list[tuple[str, str]] = []  # (src, relpart)
             for root, _dirs, names in os.walk(staging):
                 staged.extend(
@@ -3800,14 +3822,14 @@ class TxLogDataSource(BaseDataSource):
         non-schema columns (e.g. threaded row-position metadata) pass
         through untouched."""
         names = {f.name for f in schema.fields}
-        return df.select(
+        have = df.columns
+        return df.selectExpr(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
+                f"CAST({quote_ident(f.name) if f.name in have else 'NULL'}"
+                f" AS {sql_type(f.dataType)}) AS {quote_ident(f.name)}"
                 for f in schema.fields
             ],
-            *[F.col(c) for c in df.columns if c not in names],
+            *[quote_ident(c) for c in have if c not in names],
         )
 
     def _allocate_identity(self, df: DataFrame, snap: Snapshot) -> DataFrame:
@@ -3851,6 +3873,27 @@ class TxLogDataSource(BaseDataSource):
                  + F.lit(int(spec["step"])) * pos).cast("long"),
             )
         return pinned, ckpt_ids
+
+    @staticmethod
+    def _observe_count(df: DataFrame,
+                       cond: str) -> tuple[DataFrame, Observation]:
+        """``df`` with a count of its rows satisfying the SQL ``cond``
+        riding its plan, and the Observation that reads it. The count
+        comes from the FIRST action over the returned frame, so that
+        action must read every row (a write or a localCheckpoint, never
+        a ``limit``)."""
+        obs = Observation()
+        return df.observe(obs, F.expr(f"count_if({cond})").alias("n")), obs
+
+    @staticmethod
+    def _observed_zero(obs: Observation) -> bool:
+        """True when an :meth:`_observe_count` count is known to be 0.
+        Blocks until the first action over the observed frame finished.
+        An empty metrics row means the optimizer removed the observed
+        node (a constant-false filter above it): the count is unknown,
+        so not zero."""
+        row = obs._jo.getRow()
+        return row.size() == 1 and row.getLong(0) == 0
 
     @staticmethod
     def _tracked_local_ckpt(df: DataFrame) -> tuple[DataFrame, list]:
@@ -4566,13 +4609,13 @@ class TxLogDataSource(BaseDataSource):
                     # not change across version-race retries, so the
                     # bounds are computed once and reused)
                     lead = spec.primary_key_columns[0]
-                    srow = df.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.countDistinct(F.struct(
-                            *[F.col(c) for c in spec.primary_key_columns]
-                        )).alias("nd"),
-                        F.min(lead).alias("lo"),
-                        F.max(lead).alias("hi"),
+                    keys = ", ".join(
+                        quote_ident(c) for c in spec.primary_key_columns)
+                    srow = df.selectExpr(
+                        "count(1) AS n",
+                        f"count(DISTINCT struct({keys})) AS nd",
+                        f"min({quote_ident(lead)}) AS lo",
+                        f"max({quote_ident(lead)}) AS hi",
                     ).first()
                     if srow["n"] > srow["nd"]:
                         raise ETLJobException(
@@ -4604,11 +4647,11 @@ class TxLogDataSource(BaseDataSource):
                                         src_key_bounds=key_bounds)
                 else:
                     # copy-on-write MERGE runs through the shared
-                    # single-join engine (sql_dml): one pinned
-                    # target-slice x source join feeds the write AND
-                    # the cdc rows; unique source keys are already
-                    # guaranteed above, so the multiple-match guard
-                    # and residue dedup shuffles are skipped
+                    # single-join engine (sql_dml): one target-slice x
+                    # source join feeds the write (and, pinned, the cdc
+                    # rows when CDF is on); unique source keys are
+                    # already guaranteed above, so the multiple-match
+                    # guard and residue dedup are skipped
                     _merge_into_once(
                         self, merge_spec_into(spec), table, txn=txn,
                         src_df=df, snap=snap, merge_schema=merge_schema,
@@ -4830,11 +4873,21 @@ class TxLogDataSource(BaseDataSource):
             )
             if not cdc_actions:
                 return  # belt-and-braces: never commit cdc-less
-        survivors = self._read_for_rewrite(table, snap, candidates).filter(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
+        # the deleted-row count rides the rewrite: stats that could not
+        # prune may leave candidates holding no matching row, and
+        # rewriting them would commit a version that changes nothing
+        rows, deleted_n = self._observe_count(
+            self._read_for_rewrite(table, snap, candidates).selectExpr(
+                "*", f"coalesce(({predicate}), false) AS __del"),
+            "__del",
         )
-        adds = self._write_files(survivors, table, snap.partition_cols,
-                                 schema=snap.schema)
+        adds = self._write_files(
+            rows.where("NOT __del").drop("__del"),
+            table, snap.partition_cols, schema=snap.schema,
+            touched=deleted_n,
+        )
+        if adds is None:
+            return
         actions = [{"remove": {"path": p}} for p in candidates]
         actions += [{"add": a} for a in adds]
         actions += cdc_actions
@@ -5049,9 +5102,10 @@ class TxLogDataSource(BaseDataSource):
         def new_image(df: DataFrame, only_matched: bool) -> DataFrame:
             """Post-update image. ``only_matched``: df holds matched
             rows only, so assignments apply unconditionally. Otherwise
-            the match flag is computed ONCE from the old row image —
-            the predicate must not be re-evaluated against updated
-            values (SET v = v + 1 WHERE v < 5 would misfire)."""
+            df carries the match flag ``__upd``, computed ONCE from the
+            old row image — the predicate must not be re-evaluated
+            against updated values (SET v = v + 1 WHERE v < 5 would
+            misfire)."""
             cols = [f.name for f in snap.schema.fields]
             regen = {c: e for c, e in snap.generated.items()
                      if c in cols and c not in assignments}
@@ -5064,9 +5118,7 @@ class TxLogDataSource(BaseDataSource):
                 for c, e in sorted(regen.items()):
                     out = out.withColumn(c, F.expr(e).cast(types[c]))
                 return out
-            marked = df.withColumn("__upd", pred)
-            out = marked.select(
-                "__upd",
+            out = df.select(
                 *[
                     F.when(F.col("__upd"),
                            F.expr(assignments[c]).cast(types[c]))
@@ -5164,11 +5216,18 @@ class TxLogDataSource(BaseDataSource):
                                                 snap.partition_cols)
             if not cdc_actions:
                 return  # belt-and-braces: never commit cdc-less
-        rewritten = new_image(
-            self._read_for_rewrite(table, snap, candidates), False
+        # the matched-row count rides the rewrite: zero matches in
+        # candidates the stats could not prune is a logical no-op
+        marked, updated_n = self._observe_count(
+            self._read_for_rewrite(table, snap, candidates)
+            .withColumn("__upd", pred),
+            "__upd",
         )
-        adds = self._write_files(rewritten, table, snap.partition_cols,
-                                 schema=snap.schema)
+        adds = self._write_files(new_image(marked, False), table,
+                                 snap.partition_cols, schema=snap.schema,
+                                 touched=updated_n)
+        if adds is None:
+            return
         actions = [{"remove": {"path": p}} for p in candidates]
         actions += [{"add": a} for a in adds]
         actions += cdc_actions
