@@ -7,7 +7,8 @@ from pyspark.sql import functions as F
 from x_spark.sources import init_datasource
 from x_spark.errors import DataSourceException
 from x_spark.sources.base import TableRef
-from x_spark.sources.mview import parse_agg_select
+from x_spark.sources.mview import parse_agg_select as _parse
+from x_spark.sources.sql_dml import Statement
 
 
 @pytest.fixture()
@@ -39,7 +40,10 @@ def _sql(ds, stmt):
 
 
 # -- parser ------------------------------------------------------------
-def test_parse_canonical_shapes():
+def test_parse_canonical_shapes(spark):
+    def parse_agg_select(stmt):
+        return _parse(Statement(spark, stmt))
+
     p = parse_agg_select(
         "SELECT part, count(*) AS n, sum(v) AS total, avg(v), max(v) "
         "FROM t GROUP BY part"
@@ -198,6 +202,25 @@ def test_where_on_view_keys_routes(spark, ds, base):
     assert ds.mviews.route_select(
         f"SELECT part, count(*) AS n FROM {name} WHERE pk > 2 GROUP BY part"
     ) is None
+
+
+def test_escaped_quote_literal_does_not_hide_a_where_column(spark, ds, base):
+    """``v`` sits between two backslash-escaped quotes: the WHERE's
+    columns come from Spark's parse, so ``v`` (not a view dim) keeps
+    the query on its ordinary plan instead of filtering the view."""
+    name, ref = base
+    ds.append(spark.createDataFrame(
+        [(5, "b", "a'", 20.0)], "pk int, part string, grp string, v double"),
+        ref)
+    _sql(ds, f"CREATE MATERIALIZED VIEW daily AS SELECT part, grp,"
+             f" count(*) AS n FROM {name} GROUP BY part, grp")
+    where = "grp = 'a\\'' AND v > 15 AND grp <> '\\''"
+    stmt = f"SELECT part, count(*) AS n FROM {name} WHERE {where} GROUP BY part"
+    expected = sorted(map(tuple, ds.read(ref).where(where).groupBy("part")
+                          .agg(F.count("*").alias("n")).collect()))
+    assert expected == [("b", 1)]
+    assert ds.mviews.route_select(stmt) is None
+    assert sorted(map(tuple, _sql(ds, stmt).collect())) == expected
 
 
 def test_registry_persists_across_sessions(spark, ds, base):

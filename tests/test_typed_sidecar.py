@@ -433,8 +433,12 @@ def test_or_pruning_typed_and_dict_agree(spark, ds, sidecar_template, tmp_path,
 # -- round-10: partition-predicate pre-check (log-clean no-pruning path) -----
 
 
-def test_partition_only_predicate_precheck():
-    from x_spark.sources.txlog import _partition_only_predicate as p
+def test_partition_only_predicate_precheck(spark):
+    from x_spark.sources.sql_dml import expression
+    from x_spark.sources.txlog import _partition_only
+
+    def p(predicate, partition_cols):
+        return _partition_only(expression(spark, predicate), partition_cols)
 
     # partition-only shapes: pruning pass may run
     assert p("part = 'a'", ["part"])

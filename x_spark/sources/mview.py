@@ -20,13 +20,17 @@ once, and from then on:
   plan when no MV covers it. At 100 TB this turns repeated dashboard
   group-bys into O(groups) reads of maintained state.
 
-The accepted definition / routable grammar is deliberately canonical:
-``SELECT items FROM one_table GROUP BY dims`` where every item is a
-bare dim column or ``count(*)`` / ``sum|avg|min|max(col)`` with an
-optional alias — exactly the algebra AggregateView maintains (and the
-only shape for which view-serving is provably lossless). Anything
-else (WHERE, HAVING, joins, expressions, other aggregates) is not
-claimed and keeps its ordinary plan.
+The accepted shape is deliberately canonical, and it is read from
+Spark's parse of the statement (an ``Aggregate`` plan over one
+relation): ``SELECT items FROM one_table [WHERE cond] GROUP BY dims``
+where every item is a bare dim column or ``count(*)`` /
+``sum|avg|min|max(col)`` with an optional alias — exactly the algebra
+AggregateView maintains (and the only shape for which view-serving is
+provably lossless). A routed WHERE may only compare columns with
+literals (AND/OR/NOT, comparisons, IN, IS [NOT] NULL, LIKE, BETWEEN);
+a definition takes none. Anything else (HAVING, joins, expressions,
+DISTINCT or FILTER aggregates, other aggregates) is not claimed and
+keeps its ordinary plan.
 
 No analogue exists in the reference engine; public designs this
 follows: warehouse MV query rewrite, Mondrian aggregate tables,
@@ -37,12 +41,14 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import uuid
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
-_IDENT = r"(?:`[^`]+`|[A-Za-z_]\w*)"
+from x_spark.sources.sql_dml import (
+    Statement, column, column_refs, plain_name, tree,
+)
 
 
 def _norm(tok: str) -> str:
@@ -52,99 +58,76 @@ def _norm(tok: str) -> str:
     return tok.lower()
 
 
-_MEASURE = re.compile(
-    rf"^(count)\s*\(\s*\*\s*\)$|^(sum|avg|min|max)\s*\(\s*({_IDENT})\s*\)$",
-    re.I,
-)
-_AS_TAIL = re.compile(rf"^(.*?)\s+as\s+({_IDENT})$", re.I | re.S)
-_CANON = re.compile(
-    rf"^\s*select\s+(.+?)\s+from\s+({_IDENT})"
-    rf"(?:\s+where\s+(.+?))?\s+group\s+by\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-
-# words allowed inside a routable WHERE besides the filtered columns:
-# SQL operators/keywords and literal-ish tokens only — any OTHER
-# identifier (function names, non-key columns) makes the predicate
-# non-canonical and the statement falls back to its ordinary plan
-_WHERE_KEYWORDS = {
-    "and", "or", "not", "in", "is", "null", "between", "like",
-    "true", "false",
-}
+# node classes a routable WHERE may hold: column-vs-literal tests only,
+# so filtering the view's rows is filtering the base rows
+_PLAIN_WHERE = frozenset((
+    "And", "Or", "Not", "EqualTo", "EqualNullSafe", "LessThan",
+    "LessThanOrEqual", "GreaterThan", "GreaterThanOrEqual", "In", "IsNull",
+    "IsNotNull", "Like", "UnresolvedAttribute", "Literal",
+))
 
 
-def _where_idents(pred: str) -> set[str] | None:
-    """Column identifiers a predicate references, or None when it uses
-    anything beyond plain comparisons (conservative: strip string
-    literals first so their contents can't fake an identifier)."""
-    stripped = re.sub(r"'(?:[^']|'')*'", "''", pred)
-    # literal-only IN-lists are fine (the column sits before IN);
-    # any parenthesis left after removing them means functions or
-    # grouping — not the canonical shape
-    stripped = re.sub(r"\bin\s*\(["
-                      r"\s,'0-9.\-]*\)", " in ''", stripped, flags=re.I)
-    if "(" in stripped or ")" in stripped:
+def _plain_where(e: dict) -> bool:
+    """Every node of the WHERE tree is a column-vs-literal test."""
+    ok = e["class"] in _PLAIN_WHERE or (e["class"] == "UnresolvedFunction"
+                                        and e["nameParts"] == "[between]")
+    return ok and all(map(_plain_where, e["children"]))
+
+
+def _item(e: dict, keys: list[str]) -> tuple[str, str | None, str] | None:
+    """One SELECT item as (kind, col, alias): a grouped column ("dim"),
+    ``count(*)`` or ``sum|avg|min|max(col)``; None for anything else.
+    (Spark parses ``count(*)`` as ``count(1)``; both count every row.)"""
+    alias = e["name"].lower() if e["class"] == "Alias" else None
+    if e["class"] in ("Alias", "UnresolvedAlias"):
+        e = e["children"][0]
+    col = column(e)
+    if col is not None:
+        col = col.lower()
+        return ("dim", col, alias or col) if col in keys else None
+    args = e["children"]
+    if (e["class"] != "UnresolvedFunction" or len(args) != 1
+            or e.get("isDistinct") or e.get("ignoreNulls")
+            or e.get("orderingWithinGroup")):
+        return None  # a FILTER clause is a second child
+    op, (arg,) = (plain_name(e["nameParts"]) or "").lower(), args
+    if op == "count" and (arg["class"], arg.get("value"),
+                          arg.get("dataType")) == ("Literal", "1", "integer"):
+        return "count", None, alias or "n_rows"
+    col = (column(arg) or "").lower()
+    if op in ("sum", "avg", "min", "max") and col:
+        return op, col, alias or f"{op}_{col}"
+    return None
+
+
+def parse_agg_select(st: Statement, plan=None) -> dict | None:
+    """The canonical aggregate SELECT read from its parsed plan (``plan``
+    when given, else the statement's); None when it is anything else
+    (the conservative no-claim answer — routing and MV creation both
+    fall back rather than guess)."""
+    if (st.kind if plan is None else plan.nodeName()) != "Aggregate":
         return None
-    idents = set()
-    for tok in re.findall(r"`[^`]+`|[A-Za-z_]\w*", stripped):
-        tok = _norm(tok)
-        if tok not in _WHERE_KEYWORDS:
-            idents.add(tok)
-    return idents
-
-
-def parse_agg_select(stmt: str):
-    """Parse the canonical aggregate SELECT; None when the statement
-    is anything else (the conservative no-claim answer — routing and
-    MV creation both fall back rather than guess)."""
-    m = _CANON.match(stmt)
-    if m is None:
+    plan = st.plan if plan is None else plan
+    try:
+        agg = tree(json.loads(plan.toJSON()))
+    except Py4JError:
+        return None  # a plan Spark cannot print is not claimed
+    rel, cond, where_cols = agg["children"][0], None, set()
+    if rel["class"] == "Filter":
+        cond, rel = tree(rel["condition"]), rel["children"][0]
+        where_cols = column_refs(cond) if _plain_where(cond) else None
+    base = (plain_name(rel["multipartIdentifier"])
+            if rel["class"] == "UnresolvedRelation" else None)
+    keys = [column(tree(g)) for g in agg["groupingExpressions"]]
+    if base is None or None in keys or where_cols is None:
         return None
-    items_src, base = m.group(1), _norm(m.group(2))
-    where_src, keys_src = m.group(3), m.group(4)
-    if re.search(r"\b(where|having|join|union|limit|order)\b|\(\s*select",
-                 items_src + " " + keys_src, re.I):
-        return None
-    where_cols = None
-    if where_src is not None:
-        if re.search(r"\b(having|join|union|limit|order)\b|\(\s*select",
-                     where_src, re.I):
-            return None
-        where_cols = _where_idents(where_src)
-        if where_cols is None:
-            return None
-    keys = []
-    for tok in keys_src.split(","):
-        tok = tok.strip()
-        if not re.fullmatch(_IDENT, tok):
-            return None
-        keys.append(_norm(tok))
-    items = []  # (kind, col, alias); kind "dim" or a measure op
-    for raw in items_src.split(","):
-        raw = raw.strip()
-        alias = None
-        am = _AS_TAIL.match(raw)
-        if am is not None:
-            raw, alias = am.group(1).strip(), _norm(am.group(2))
-        mm = _MEASURE.match(raw)
-        if mm is not None:
-            op = (mm.group(1) or mm.group(2)).lower()
-            col = _norm(mm.group(3)) if mm.group(3) else None
-            default = "n_rows" if op == "count" else f"{op}_{col}"
-            items.append((op, col, alias or default))
-            continue
-        if re.fullmatch(_IDENT, raw):
-            col = _norm(raw)
-            if col not in keys:
-                return None  # bare non-grouped column: not canonical
-            items.append(("dim", col, alias or col))
-            continue
-        return None
-    if not any(kind != "dim" for kind, *_ in items):
-        return None  # no measures: plain DISTINCT, not our shape
-    return {"items": items, "base": base, "keys": keys,
-            "where": where_src.strip() if where_src else None,
-            "where_cols": sorted(where_cols) if where_cols else []}
+    keys = [k.lower() for k in keys]
+    items = [_item(tree(a), keys) for a in agg["aggregateExpressions"]]
+    if None in items or all(kind == "dim" for kind, *_ in items):
+        return None  # not canonical, or no measures (a plain DISTINCT)
+    where = st.text(plan.child().condition()) if cond else None
+    return {"items": items, "base": base.lower(), "keys": keys,
+            "where": where, "where_cols": sorted(c.lower() for c in where_cols)}
 
 
 class MViewStore:
@@ -178,11 +161,20 @@ class MViewStore:
         os.replace(tmp, f)
 
     # -- lifecycle -----------------------------------------------------
-    def create(self, name: str, definition: str, replace: bool = False) -> None:
+    def create(self, name: str, definition: str | Statement,
+               replace: bool = False) -> None:
+        """Register and materialize ``definition``: the SELECT text, or
+        the parsed ``CREATE MATERIALIZED VIEW ... AS SELECT`` statement
+        (its query plan is read, not parsed again)."""
         from x_spark.errors import DataSourceException
 
         name = _norm(name)
-        parsed = parse_agg_select(definition)
+        if isinstance(definition, Statement):
+            st, plan = definition, definition.plan.query()
+            definition = definition.plan.originalText()
+        else:
+            st, plan = Statement(self.ds.spark, definition), None
+        parsed = parse_agg_select(st, plan)
         if parsed is None or parsed["where"]:
             raise DataSourceException(
                 "materialized view definition must be the canonical "
@@ -351,7 +343,7 @@ class MViewStore:
         )
 
     # -- transparent routing -------------------------------------------
-    def route_select(self, stmt: str) -> DataFrame | None:
+    def route_select(self, stmt: str | Statement) -> DataFrame | None:
         """Serve a canonical aggregate SELECT over a txlog BASE table
         from a covering MV (refreshing it first when stale, so the
         routed answer reflects the same base version the pass-through
@@ -359,11 +351,17 @@ class MViewStore:
         caller keeps the ordinary plan. Routed sums/averages are
         DECIMAL(30,6)-exact (the maintained-state algebra) where the
         pass-through plan would compute order-dependent double sums —
-        same value up to float summation order, deterministic here."""
+        same value up to float summation order, deterministic here.
+        ``stmt`` may be the dispatcher's already parsed Statement."""
+        specs = self.specs()
+        if not specs:
+            return None  # no view to route to: the plan is not read
+        if not isinstance(stmt, Statement):
+            stmt = Statement(self.ds.spark, stmt)
         parsed = parse_agg_select(stmt)
         if parsed is None:
             return None
-        specs = {n: s for n, s in self.specs().items()
+        specs = {n: s for n, s in specs.items()
                  if s["base"] == parsed["base"]}
         if not specs or parsed["base"] not in self.ds._known_names():
             return None

@@ -28,6 +28,9 @@ it into the plain values the executors below consume:
 - ``UPDATE t SET c = e, ... [WHERE pred]`` (executed by
   ``TxLogDataSource.update``).
 
+Predicates are read from Spark's parse tree too (:func:`expression`):
+footer-stats pruning, the partition-only check and the MERGE key.
+
 Scale shape of the merge executor: candidate files are pruned by
 footer key-range overlap before anything is read; one target-slice x
 source full-outer join, staged by one SQL projection, streams straight
@@ -38,80 +41,16 @@ join total, cost tracks the candidate slice, never the table.
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, functions as F
 
 from x_spark.errors import DataSourceException
 from x_spark.sources.base import TableRef
-
-
-# -- top-level token scanning (footer-stats predicate pruning) ---------
-
-
-def structural_mask(s: str) -> list[bool]:
-    """Per-character flag: True where the character sits at paren
-    depth 0 OUTSIDE string literals. Both quote styles count (Spark
-    treats double-quoted tokens as string literals by default) and a
-    doubled quote escapes inside its own literal ('it''s', "a""b")."""
-    out = [False] * len(s)
-    depth, quote, i = 0, None, 0
-    while i < len(s):
-        ch = s[i]
-        if quote is not None:
-            if ch == quote:
-                if i + 1 < len(s) and s[i + 1] == quote:
-                    i += 2
-                    continue
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            out[i] = True
-        i += 1
-    return out
-
-
-def find_close_paren(s: str, start: int) -> int:
-    """Index of the ``)`` matching the ``(`` at ``start``, honoring
-    string literals (a quoted ``)`` never closes). -1 if unbalanced."""
-    depth, quote, i = 0, None, start
-    while i < len(s):
-        ch = s[i]
-        if quote is not None:
-            if ch == quote:
-                if i + 1 < len(s) and s[i + 1] == quote:
-                    i += 2
-                    continue
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
-def split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on top-level ``sep`` characters."""
-    mask = structural_mask(s)
-    parts, last = [], 0
-    for i, ch in enumerate(s):
-        if ch == sep and mask[i]:
-            parts.append(s[last:i])
-            last = i + 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts]
 
 
 def _last(ident: str) -> str:
@@ -144,14 +83,10 @@ class Statement:
         return [seq.apply(i) for i in range(seq.size())]
 
     def text(self, node) -> str:
-        """The statement text ``node`` was parsed from."""
-        o = node.origin()
-        return self.sql[o.startIndex().get():o.stopIndex().get() + 1]
-
-    def query(self, node) -> str:
-        """Text of a query plan node. It starts at the leftmost
-        descendant: the Project of ``FROM t SELECT a`` begins after
-        its relation."""
+        """The statement text ``node`` was parsed from. It starts at the
+        leftmost descendant: the Project of ``FROM t SELECT a`` begins
+        after its relation, and the origin of ``v IN (1, 2)`` (or
+        BETWEEN, LIKE, IS NULL) begins at its keyword, after ``v``."""
         o = node.origin()
         start, stop = o.startIndex().get(), o.stopIndex().get()
         while node.children().size():
@@ -217,6 +152,153 @@ class Statement:
                 kids = (self.items(node.children())
                         + self.items(node.innerChildren()))
                 stack.extend((k, kind) for k in reversed(kids))
+
+
+# -- expression reader (pruning, partition-only check, MERGE key, MV) --
+#
+# Catalyst's ``toJSON`` prints a tree as one pre-order node list: one
+# py4j call brings a whole predicate (or plan) across, and each node
+# becomes a dict of its JSON fields with ``class`` cut to the class name
+# and ``children`` holding the child nodes. The readers are
+# conservative: a shape they do not know prunes nothing, is never
+# partition-only and gives no MERGE key.
+
+
+def tree(nodes: list[dict]) -> dict:
+    """A ``toJSON`` node list as a tree of node dicts."""
+    it = iter(nodes)
+
+    def build() -> dict:
+        n = dict(next(it))
+        n["class"] = n["class"].rsplit(".", 1)[-1]
+        n["children"] = [build() for _ in range(n.pop("num-children"))]
+        return n
+
+    return build()
+
+
+def expression(spark, text: str) -> dict:
+    """``text`` parsed by Spark's expression parser. Text that does not
+    parse or print reads as an ``Unparsed`` node, which hides its column
+    references: nothing is pruned, and Spark's analysis of the
+    predicate reports the error as before."""
+    try:
+        return tree(json.loads(spark._jsparkSession.sessionState()
+                               .sqlParser().parseExpression(text).toJSON()))
+    except (ParseException, Py4JError, RecursionError):
+        return {"class": "Unparsed", "children": []}
+
+
+def plain_name(printed: str) -> str | None:
+    """The name in a printed one-part ``nameParts`` (``[a]``), else None:
+    ``toJSON`` prints `` `a, b` `` like ``a.b`` (``[a, b]``)."""
+    return None if ", " in printed else printed[1:-1]
+
+
+def column(e: dict) -> str | None:
+    """Name of an unqualified column reference, else None."""
+    if e["class"] != "UnresolvedAttribute":
+        return None
+    return plain_name(e["nameParts"])
+
+
+def conjuncts(e: dict, op: str = "And") -> list[dict]:
+    """Operands of a chain of ``op`` (``And`` / ``Or``) nodes."""
+    if e["class"] != op:
+        return [e]
+    return [x for c in e["children"] for x in conjuncts(c, op)]
+
+
+_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
+_FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+_NUMERIC = ("integer", "long", "short", "byte", "double", "float")
+# nodes whose column references the tree does not show
+_HIDDEN = frozenset(("Exists", "InSubquery", "ListQuery", "ScalarSubquery",
+                     "LateralSubquery", "UnresolvedStar", "UnresolvedRegex",
+                     "Unparsed"))
+
+
+def _literal(e: dict) -> tuple[str, bool] | None:
+    """A literal stats may prune on, as (value, is a string): a string
+    prunes string columns, a number numeric ones, any other type (date,
+    timestamp, binary, boolean, null) nothing."""
+    t = e["dataType"] if e["class"] == "Literal" else ""
+    if t == "string" or t in _NUMERIC or t.startswith("decimal("):
+        return e["value"], t == "string"
+    return None
+
+
+def _prunable(e: dict) -> tuple[str, str, list] | None:
+    """``col <op> literal`` (either operand order) or ``col IN
+    (literals)`` as (col, op, [(value, is a string)]), else None."""
+    kids = e["children"]
+    if e["class"] in _CMP:
+        (a, b), op = kids, _CMP[e["class"]]
+        if column(a) is None:
+            a, b, op = b, a, _FLIP[op]
+        c, lit = column(a), _literal(b)
+        return None if c is None or lit is None else (c, op, [lit])
+    if e["class"] == "In":
+        c, lits = column(kids[0]), [_literal(x) for x in kids[1:]]
+        return None if c is None or None in lits else (c, "in", lits)
+    return None
+
+
+def pruning_disjuncts(e: dict) -> list[list[tuple[str, str, list]]]:
+    """The OR-of-AND pruning structure (Delta's data-skipping rule for
+    disjunctions): per disjunct, the conjuncts footer min/max stats can
+    prune on. A file is excluded only when EVERY disjunct has one its
+    stats prove false, so a disjunct with none gives ``[]`` (no
+    pruning). The reference's generated replaceWhere shape, ``(pk2='a')
+    OR (pk2='b')`` (etl/overwrite.py:27-33), prunes this way."""
+    out = []
+    for d in conjuncts(e, "Or"):
+        conjs = [c for c in map(_prunable, conjuncts(d)) if c is not None]
+        if not conjs:
+            return []
+        out.append(conjs)
+    return out
+
+
+def column_refs(e: dict) -> set[str] | None:
+    """Names of the columns ``e`` references; None when it may reference
+    one it does not name plainly (a subquery, a star, a qualified name,
+    unparsed text). Lambda variables are not columns."""
+    refs, stack = set(), [e]
+    while stack:
+        n = stack.pop()
+        if n["class"] in _HIDDEN:
+            return None
+        if n["class"] == "UnresolvedAttribute":
+            refs.add(column(n))
+        stack.extend(n["children"])
+    return None if None in refs else refs
+
+
+def equi_key(e: dict, ta: str, sa: str, tgt_cols: list[str],
+             src_cols: list[str]) -> tuple[str, str] | None:
+    """First top-level ``<target col> = <source col>`` conjunct of a MERGE
+    ON as (target column, source column), the key-range pruning handle;
+    None when there is none (every file stays a candidate)."""
+    def side(n: dict) -> tuple[str | None, str] | None:
+        if n["class"] != "UnresolvedAttribute":
+            return None
+        name = n["nameParts"][1:-1]
+        q, _, c = name.partition(", ")
+        if not c:
+            t, s = name in tgt_cols, name in src_cols
+            return ("t" if t and not s else "s" if s and not t else None), name
+        if ", " in c or name in tgt_cols or name in src_cols:
+            return None  # more parts, or a name `q, c` that prints as q.c
+        return {ta: "t", sa: "s"}.get(q), c
+
+    for conj in conjuncts(e):
+        if conj["class"] == "EqualTo":
+            a, b = map(side, conj["children"])
+            if a and b and {a[0], b[0]} == {"t", "s"}:
+                return (a[1], b[1]) if a[0] == "t" else (b[1], a[1])
+    return None
 
 
 # -- parsed statement shapes -------------------------------------------
@@ -292,7 +374,7 @@ def parse_create_table(st: Statement) -> CreateTable | None:
         part_cols.append(list(t.references()[0].fieldNames())[-1])
     cols_ddl = as_select = None
     if st.kind == "CreateTableAsSelect":
-        as_select = st.query(p.query())
+        as_select = st.text(p.query())
     else:
         cols = st.items(p.columns())
         if not cols:
@@ -363,7 +445,7 @@ def parse_merge(st: Statement) -> MergeInto | None:
     source_alias = st.alias(source)
     body = source.children().apply(0) if source_alias else source
     source_sql = (st.text(body) if body.nodeName() == "UnresolvedRelation"
-                  else f"({st.query(body)})")
+                  else f"({st.text(body)})")
     return MergeInto(
         st.name(target), st.alias(target), source_sql, source_alias,
         st.text(p.mergeCondition()),
@@ -479,73 +561,6 @@ def execute_insert(ds, ins: InsertStmt) -> None:
         ds.overwrite(df, ref)
 
 
-def _split_top_and(s: str) -> list[str]:
-    """Split on top-level ``AND`` keywords (parens + literals masked)."""
-    mask = structural_mask(s)
-    cuts = [m.start() for m in
-            re.finditer(r"(?<![\w`])and(?![\w`])", s, re.I)
-            if mask[m.start()]]
-    parts, last = [], 0
-    for c in cuts:
-        parts.append(s[last:c])
-        last = c + 3
-    parts.append(s[last:])
-    return parts
-
-
-def _split_top_or(s: str) -> list[str]:
-    """Split on top-level ``OR`` keywords (parens + literals masked)."""
-    mask = structural_mask(s)
-    cuts = [m.start() for m in
-            re.finditer(r"(?<![\w`])or(?![\w`])", s, re.I)
-            if mask[m.start()]]
-    parts, last = [], 0
-    for c in cuts:
-        parts.append(s[last:c])
-        last = c + 2
-    parts.append(s[last:])
-    return parts
-
-
-def strip_outer_parens(s: str) -> str:
-    """Remove redundant wrapping parens: ``((a OR b))`` -> ``a OR b``.
-    Only strips when the opening paren's match is the LAST character —
-    ``(a) AND (b)`` is untouched."""
-    s = s.strip()
-    while s.startswith("(") and find_close_paren(s, 0) == len(s) - 1:
-        s = s[1:-1].strip()
-    return s
-
-
-def _extract_equi_key(on: str, ta: str, sa: str, tgt_cols: list[str],
-                      src_cols: list[str]) -> tuple[str, str] | None:
-    """First top-level ``<target col> = <source col>`` conjunct of the
-    ON condition, as (target column, source column) — the key-range
-    pruning handle. None when the ON shape has no plain equi-conjunct
-    (every file then stays a candidate: correct, just unpruned)."""
-    qid = r"(?:(\w+)\s*\.\s*)?(`[^`]+`|\w+)"
-    for conj in _split_top_and(on):
-        m = re.fullmatch(rf"\s*{qid}\s*=\s*{qid}\s*", conj)
-        if not m:
-            continue
-        q1, c1, q2, c2 = m.groups()
-        c1, c2 = c1.strip("`"), c2.strip("`")
-
-        def side(q, c):
-            if q == ta or (q is None and c in tgt_cols and c not in src_cols):
-                return "t", c
-            if q == sa or (q is None and c in src_cols and c not in tgt_cols):
-                return "s", c
-            return None, c
-
-        s1, s2 = side(q1, c1), side(q2, c2)
-        if s1[0] == "t" and s2[0] == "s":
-            return s1[1], s2[1]
-        if s1[0] == "s" and s2[0] == "t":
-            return s2[1], s1[1]
-    return None
-
-
 def execute_merge_into(ds, ms: MergeInto) -> None:
     """General MERGE executor (Delta semantics, copy-on-write over the
     key-pruned candidate files). See module docstring for the one-join
@@ -579,23 +594,23 @@ def merge_spec_into(spec, sa: str = "SRC", ta: str = "TGT") -> MergeInto:
     everything else DEFAULT/NULL — the reference's upsert quirk,
     SURVEY §8.7)."""
     on = " AND ".join(
-        f"{ta}.{c} = {sa}.{c}" for c in spec.primary_key_columns
+        f"{ta}.{quote_ident(c)} = {sa}.{quote_ident(c)}"
+        for c in spec.primary_key_columns
     )
     if spec.extra_target_predicate and \
             spec.extra_target_predicate.strip() not in ("1=1", "TRUE"):
         on += f" AND ({spec.extra_target_predicate})"
     set_cols = spec.all_set_columns
     matched = [MatchedClause(
-        None, "update", {c: f"{sa}.{c}" for c in spec.update_columns}
+        None, "update",
+        {c: f"{sa}.{quote_ident(c)}" for c in spec.update_columns}
     )]
     not_matched = (
         [InsertClause(None, list(set_cols),
-                      [f"{sa}.{c}" for c in set_cols])]
+                      [f"{sa}.{quote_ident(c)}" for c in set_cols])]
         if spec.insert_when_not_matched else []
     )
     return MergeInto("", ta, "", sa, on, matched, not_matched, [])
-
-
 
 
 def quote_ident(name: str) -> str:
@@ -741,12 +756,13 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                 )
 
     base = snap.version
-    key = _extract_equi_key(ms.on, ta, sa, tgt_cols, src_cols)
-    if key is not None and not ms.by_source:
-        # key-range pruning is only sound when unmatched target rows
-        # are untouched: a WHEN NOT MATCHED BY SOURCE clause acts on
-        # EXACTLY the rows pruning would skip (Delta disables file
-        # pruning the same way), so it forces the full candidate set
+    # key-range pruning is only sound when unmatched target rows are
+    # untouched: a WHEN NOT MATCHED BY SOURCE clause acts on EXACTLY the
+    # rows pruning would skip (Delta disables file pruning the same
+    # way), so it forces the full candidate set
+    key = None if ms.by_source else equi_key(
+        expression(spark, ms.on), ta, sa, tgt_cols, src_cols)
+    if key is not None:
         tcol, scol = key
         keyed = src_df.selectExpr(
             f"{quote_ident(scol)} AS {quote_ident(tcol)}")

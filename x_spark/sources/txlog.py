@@ -660,51 +660,14 @@ def iter_commit_actions(table: str, fname: str):
                 yield action
 
 
-# words a predicate may contain that are never column references:
-# operators/keywords, literal prefixes, CAST targets. Anything NOT here
-# (and not called as a function) must be a partition column for the
-# partition-pruning pass to run — see _partition_only_predicate.
-_SQL_NONCOLUMN_WORDS = frozenset("""
-and or not in is null between like ilike rlike regexp true false
-date timestamp timestamp_ntz interval cast as case when then else end
-distinct exists all any some escape div
-int integer bigint smallint tinyint float double real decimal numeric
-string boolean varchar char binary
-""".split())
-
-
-def _partition_only_predicate(predicate: str,
-                              partition_cols: list[str]) -> bool:
-    """Cheap driver-side pre-check that every column reference in
-    ``predicate`` is a partition column. Predicates referencing
-    non-partition columns must skip partition-value pruning (correct:
-    pruning is an optimization), and deciding that by letting JVM
-    analysis fail logs a full ERROR stack trace per occurrence — this
-    check keeps a 100-TB job's logs clean on every non-partition
-    predicate. Conservative by construction: an identifier that is not
-    a keyword, not immediately called as a function, not a number, and
-    not a partition column — or any dotted qualifier — returns False
-    (no pruning, always sound). A predicate passing this check still
-    evaluates under the exception backstop, so a false positive cannot
-    mis-prune."""
-    parts = {c.lower() for c in partition_cols}
-    segs = re.split(r"('(?:[^']|'')*')", predicate)
-    for i in range(0, len(segs), 2):
-        seg = segs[i]
-        for m in re.finditer(r"`([^`]+)`|\b([A-Za-z_]\w*)\b", seg):
-            ident = (m.group(1) or m.group(2))
-            rest = seg[m.end():].lstrip()
-            before = seg[:m.start()].rstrip()
-            if before.endswith(".") or rest.startswith("."):
-                return False  # qualified name: frame has bare names
-            if m.group(2) is not None:
-                if rest.startswith("("):
-                    continue  # function call
-                if ident.lower() in _SQL_NONCOLUMN_WORDS:
-                    continue
-            if ident.lower() not in parts:
-                return False
-    return True
+def _partition_only(e: dict, partition_cols: list[str]) -> bool:
+    """Every column the predicate tree ``e`` references is a partition
+    column (case-insensitive), so the partition-value pass may run
+    without JVM analysis failing (and logging an ERROR stack trace) on
+    a non-partition predicate. Unreadable references answer False."""
+    refs = sql_dml.column_refs(e)
+    return refs is not None and {c.lower() for c in refs} <= {
+        c.lower() for c in partition_cols}
 
 
 class LazyAdds(Mapping):
@@ -1489,7 +1452,7 @@ class TxLogDataSource(BaseDataSource):
         # the maintained O(groups) state (refreshed if stale) instead
         # of scanning the fact table; anything not provably coverable
         # returns None and keeps the ordinary plan
-        routed = self.mviews.route_select(stmt)
+        routed = self.mviews.route_select(st)
         if routed is not None:
             return routed
         return self.spark.sql(self._bind(st))
@@ -1729,7 +1692,7 @@ class TxLogDataSource(BaseDataSource):
             sql_dml.execute_create(self, ct)
             return self._done()
         if kind == "CreateMaterializedViewAsSelect":
-            self.mviews.create(st.name(p.name()), p.originalText())
+            self.mviews.create(st.name(p.name()), st)
             return self._done()
         if kind in ("CreateView", "CreateViewCommand", "DropView"):
             return self._dispatch_view(st)
@@ -5394,18 +5357,17 @@ class TxLogDataSource(BaseDataSource):
                 raise DataSourceException(
                     "OPTIMIZE WHERE requires a partitioned table"
                 )
+            # strict rule: a predicate the partition tuple alone cannot
+            # decide would fall back to all files — reject it
+            if not _partition_only(sql_dml.expression(self.spark, where),
+                                   snap.partition_cols):
+                raise DataSourceException(
+                    f"OPTIMIZE WHERE must reference only partition columns "
+                    f"({', '.join(snap.partition_cols)}): {where!r}"
+                )
+            self._validate_predicate(snap, where)
             in_scope = set(self._files_matching_predicate(
                 table, snap, where))
-            # strict rule: a predicate that cannot be evaluated on the
-            # partition tuple alone falls back to all-files — reject it
-            part_cols = ", ".join(snap.partition_cols)
-            probe = self._files_matching_predicate(
-                table, snap, f"({where}) AND 1=0")
-            if probe:
-                raise DataSourceException(
-                    f"OPTIMIZE WHERE must reference only partition "
-                    f"columns ({part_cols}): {where!r}"
-                )
         else:
             in_scope = set(snap.files)
         threshold = int(target_size_mb) << 20
@@ -6624,102 +6586,6 @@ class TxLogDataSource(BaseDataSource):
                 )
         return sorted(p for p, e in zip(paths, exclude) if not e)
 
-    _PRUNE_LIT = r"(?:'((?:[^']|'')*)'|(-?\d+(?:\.\d+)?))"
-
-    @classmethod
-    def _parse_conjunct(cls, part: str):
-        """One predicate fragment parsed to ``(col, op, literals)``
-        when it has the shape footer min/max stats can prune on —
-        ``col <op> literal`` (op in = < <= > >=) or ``col IN
-        (literals)`` — else None. Anything unparseable (NOT,
-        functions, column-column, flipped operands, nested boolean
-        structure) contributes no pruning, which is always safe
-        inside an AND: ONE provably-false required conjunct excludes
-        the file regardless of the rest."""
-        import re
-
-        from x_spark.sources.sql_dml import split_top_level
-
-        m = re.fullmatch(
-            rf"\s*`?([A-Za-z_]\w*)`?\s*(<=|>=|=|<|>)\s*"
-            rf"{cls._PRUNE_LIT}\s*", part,
-        )
-        if m:
-            quoted = m.group(3) is not None
-            lit = m.group(3) if quoted else m.group(4)
-            return (m.group(1), m.group(2),
-                    [(lit.replace("''", "'"), quoted)])
-        m = re.fullmatch(
-            rf"\s*`?([A-Za-z_]\w*)`?\s+in\s*\(([^()]*)\)\s*",
-            part, re.I,
-        )
-        if m:
-            # EVERY comma-separated element must be a bare literal —
-            # harvesting digit/string fragments out of column
-            # references or arithmetic (``IN (2, id2)``, ``IN (1+1)``)
-            # would prune on values that are not the IN-list's values
-            lits: list[tuple[str, bool]] = []
-            for el in split_top_level(m.group(2)):
-                lm = re.fullmatch(rf"\s*{cls._PRUNE_LIT}\s*", el)
-                if lm is None:
-                    return None
-                quoted = lm.group(1) is not None
-                lits.append((
-                    (lm.group(1) if quoted else lm.group(2))
-                    .replace("''", "'"),
-                    quoted,
-                ))
-            if lits:
-                return (m.group(1), "in", lits)
-        return None
-
-    @classmethod
-    def _simple_conjuncts(cls, predicate: str) -> list[tuple[str, str, list]]:
-        """Parsed ``(col, op, literals)`` conjuncts of a single
-        AND-only fragment (unparseable conjuncts dropped — safe, see
-        _parse_conjunct)."""
-        from x_spark.sources.sql_dml import _split_top_and
-
-        out = []
-        for part in _split_top_and(predicate):
-            parsed = cls._parse_conjunct(part)
-            if parsed is not None:
-                out.append(parsed)
-        return out
-
-    @classmethod
-    def _pruning_disjuncts(cls, predicate: str,
-                           ) -> list[list[tuple[str, str, list]]]:
-        """The predicate's OR-of-conjuncts pruning structure (Delta's
-        data-skipping rule for disjunctions): recursively split on
-        top-level OR (stripping redundant outer parens, which can
-        expose further ORs), parse each disjunct's top-level AND
-        conjuncts. A file may be excluded only when EVERY disjunct has
-        some conjunct its stats prove false, so a disjunct yielding no
-        parseable conjunct makes the whole predicate unprunable —
-        returns ``[]``.
-
-        This is what lets the reference's own generated replaceWhere
-        shape — OR-of-partition-tuples, ``(pk2='a') OR (pk2='b')``
-        (etl/overwrite.py:27-33) — skip files on footer stats instead
-        of degrading to a full candidate set."""
-        from x_spark.sources.sql_dml import (
-            _split_top_or, strip_outer_parens,
-        )
-
-        s = strip_outer_parens(predicate)
-        parts = _split_top_or(s)
-        if len(parts) > 1:
-            out: list[list] = []
-            for p in parts:
-                sub = cls._pruning_disjuncts(p)
-                if not sub:
-                    return []  # an unprunable branch poisons the OR
-                out.extend(sub)
-            return out
-        conjs = cls._simple_conjuncts(s)
-        return [conjs] if conjs else []
-
     @staticmethod
     def _exclude_mask(mins: list, maxs: list, kind: str, op: str,
                       lits: list[tuple[str, bool]]):
@@ -6792,9 +6658,11 @@ class TxLogDataSource(BaseDataSource):
         read-free passes over the COLUMNAR metadata plane (typed
         sidecar columns when the snapshot is sidecar-backed — no
         add-action deserialization, column-pruned IO): footer min/max
-        stats prune files whose range provably excludes a simple
-        conjunct (``col <op> literal`` / ``col IN``), then partition
-        values prune files of non-matching partitions. A pruned file's
+        stats prune files whose range provably excludes a conjunct
+        ``col <op> literal`` (either operand order) or ``col IN
+        (literals)`` of Spark's parse of the predicate
+        (:func:`sql_dml.pruning_disjuncts`), then partition values
+        prune files of non-matching partitions. A pruned file's
         rows all evaluate FALSE/NULL and survive untouched; at 100 TB
         this is what makes ``DELETE WHERE id = k`` on a clustered
         table touch one file, not every file — and at millions of
@@ -6811,8 +6679,8 @@ class TxLogDataSource(BaseDataSource):
 
         def gate(conjs: list) -> list:
             """Type-resolved, literal-kind-gated conjuncts: numeric
-            literals prune numeric columns, quoted literals prune
-            StringType columns ONLY — a quoted literal
+            literals prune numeric columns, string literals prune
+            StringType columns ONLY — a string literal
             lexicographically compared against a timestamp column's
             string-serialized stats could prune a semantically equal
             value ('2024-01-01' vs '2024-01-01 00:00:00'), so those
@@ -6834,7 +6702,8 @@ class TxLogDataSource(BaseDataSource):
         # OR-of-conjuncts skipping: a file is excluded iff EVERY
         # disjunct has a gated conjunct its stats prove false; a
         # disjunct left with no gated conjunct disables skipping
-        disjuncts = [gate(d) for d in self._pruning_disjuncts(predicate)]
+        e = sql_dml.expression(self.spark, predicate)
+        disjuncts = [gate(d) for d in sql_dml.pruning_disjuncts(e)]
         if any(not d for d in disjuncts):
             disjuncts = []
         stat_kinds = {c: k for d in disjuncts for c, k, _, _ in d}
@@ -6857,7 +6726,7 @@ class TxLogDataSource(BaseDataSource):
         rels = [paths[i] for i in idx]
         if not snap.partition_cols or not rels:
             return rels
-        if not _partition_only_predicate(predicate, snap.partition_cols):
+        if not _partition_only(e, snap.partition_cols):
             return rels  # references non-partition columns: no pruning
         by_name = {f.name: f for f in snap.schema.fields}
         part_fields = [by_name[c] for c in snap.partition_cols]
