@@ -125,8 +125,8 @@ def test_batch_and_dict_pruning_agree(spark, ds, tmp_path, monkeypatch):
     ref = _batched_table(spark, ds, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
     twin = Snapshot(lazy.version, lazy.schema_json, lazy.partition_cols,
-                    dict(lazy.files), lazy.configuration,
-                    row_id_high=lazy.row_id_high)
+                    LazyAdds(ref.path, [("delta", dict(lazy.files))]),
+                    lazy.configuration, row_id_high=lazy.row_id_high)
     for pred in ["pk = 3", "pk >= 30", "part = 'p2'",
                  "part = 'p0' AND pk < 8", "pk IN (1, 2, 999)",
                  "pk = 1 OR pk = 38"]:

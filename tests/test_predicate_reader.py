@@ -163,3 +163,32 @@ def test_pruning_never_drops_a_matching_file(ds, table, pred):
 def test_pruning_reads_shapes_the_regex_missed(ds, table, pred):
     first = table[2].where("pk = 0").select("__file").first()[0]
     assert _sound(ds, table, pred) == {first}
+
+
+# -- collated strings: binary footer stats never prune them --------------
+
+
+def _collated_table(spark, ds, tmp_path, schema):
+    ref = TableRef(path=str(tmp_path / "c"))
+    ds.create(ref, spark.createDataFrame([], schema).schema)
+    ds.append(spark.createDataFrame([("ABC", 1)], schema), ref)
+    ds.append(spark.createDataFrame([("zzz", 2)], schema), ref)
+    return ref
+
+
+def test_collated_string_delete_keeps_its_candidate(spark, ds, tmp_path):
+    """``'abc'`` equals ``'ABC'`` under UTF8_LCASE but sorts outside the
+    file's binary [min, max]: the file must stay a candidate."""
+    ref = _collated_table(spark, ds, tmp_path,
+                          "s string collate utf8_lcase, t int")
+    assert ds.read(ref).filter("s = 'abc'").count() == 1
+    ds.delete(ref, "s = 'abc'")
+    assert _rows(ds.read(ref)) == [("zzz", 2)]
+
+
+def test_collated_string_merge_key_keeps_its_candidate(spark, ds, tmp_path):
+    schema = "k string collate utf8_lcase, v int"
+    ref = _collated_table(spark, ds, tmp_path, schema)
+    ds.merge(spark.createDataFrame([("abc", 9)], schema), ref,
+             MergeSpec(["k"], ["v"], insert_when_not_matched=True))
+    assert _rows(ds.read(ref)) == [("ABC", 9), ("zzz", 2)]

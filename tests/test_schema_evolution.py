@@ -205,6 +205,22 @@ def test_schema_evolution_guards(spark, ds, tmp_path):
         ds.rename_column(ref, "pk", "id")  # referenced by the expr
 
 
+def test_backticked_reference_blocks_drop_column(spark, ds, tmp_path):
+    """A constraint that names its column in backticks is still a
+    dependency: the drop refuses instead of committing a schema the
+    constraint can no longer resolve against."""
+    ref = TableRef(path=str(tmp_path / "bt"))
+    df = spark.createDataFrame([(1, 1)], "k int, v int")
+    ds.create(ref, df.schema)
+    ds.append(df, ref)
+    ds.set_properties(ref, {COLUMN_MAPPING_KEY: "name"})
+    ds.add_constraint(ref, "vpos", "`v` > 0")
+    with pytest.raises(DataSourceException, match="referenced by"):
+        ds.drop_column(ref, "v")
+    ds.append(spark.createDataFrame([(2, 2)], "k int, v int"), ref)
+    assert _rows(ds.read(ref)) == [(1, 1), (2, 2)]
+
+
 def test_type_widening_ddl(spark, ds, tmp_path):
     """ALTER COLUMN TYPE: metadata-only widening — old (narrow) files
     upcast through the pinned-schema read, new appends land wide,
@@ -480,6 +496,13 @@ def test_overwrite_schema_reconciles_configuration(spark, ds, tmp_path):
         ds.overwrite(spark.createDataFrame([(8,)], "pk int"),
                      ref, overwrite_schema=True)
     # nothing committed by the refusal
+    assert [r.pk for r in ds.read(ref).collect()] == [7]
+    # and so does one that names the column in backticks
+    ds.drop_constraint(ref, "s_nonempty")
+    ds.add_constraint(ref, "s_quoted", "`s` <> ''")
+    with pytest.raises(DataSourceException, match="s_quoted"):
+        ds.overwrite(spark.createDataFrame([(8,)], "pk int"),
+                     ref, overwrite_schema=True)
     assert [r.pk for r in ds.read(ref).collect()] == [7]
 
 

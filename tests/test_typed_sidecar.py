@@ -178,12 +178,13 @@ def test_pruning_reads_are_column_pruned(spark, ds, sidecar_template, tmp_path,
     assert len(got) == 1  # pk=3 lives in exactly the first file
 
 
-def _dict_twin(snap):
-    """The same snapshot with a plain-dict live set — the fallback
-    metadata path — for typed-vs-dict equivalence checks."""
+def _dict_twin(table, snap):
+    """The same snapshot with its live set as one delta layer of add
+    dicts — metadata extracted from the dicts instead of the typed
+    sidecar columns — for typed-vs-dict equivalence checks."""
     return Snapshot(snap.version, snap.schema_json, snap.partition_cols,
-                    dict(snap.files), snap.configuration,
-                    row_id_high=snap.row_id_high)
+                    LazyAdds(table, [("delta", dict(snap.files))]),
+                    snap.configuration, row_id_high=snap.row_id_high)
 
 
 PREDICATES = [
@@ -210,7 +211,7 @@ def test_typed_and_dict_pruning_agree(spark, ds, sidecar_template, tmp_path,
                                       monkeypatch):
     ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref.path, lazy)
     for pred in PREDICATES:
         a = ds._files_matching_predicate(ref.path, lazy, pred)
         b = ds._files_matching_predicate(ref.path, twin, pred)
@@ -221,7 +222,7 @@ def test_typed_and_dict_key_overlap_agree(
         spark, ds, sidecar_template, tmp_path, monkeypatch):
     ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref.path, lazy)
     sources = {
         "pk": spark.createDataFrame([(3,), (47,)], "pk int"),
         "name": spark.createDataFrame([("n0003",)], "name string"),
@@ -252,37 +253,6 @@ def test_delete_correct_through_typed_plane(
     assert ds.read(ref).filter("pk = 3").count() == 0
     untouched = [p for p in before if p in after]
     assert len(before) - len(untouched) == 1  # one file rewritten
-
-
-def test_pre_typed_sidecar_still_resolves_and_upgrades(
-        spark, ds, sidecar_template, tmp_path, monkeypatch):
-    """A sidecar from the pre-typed layout (add_json only) still
-    resolves — and clean_log's floor refresh upgrades it in place."""
-    ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
-    log = os.path.join(ref.path, "_txlog")
-    _, checkpoints = _list_log(ref.path)
-    with open(os.path.join(log, checkpoints[-1])) as fh:
-        ck = json.load(fh)
-    side = os.path.join(log, ck["addsParquet"])
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    old = pa.table({
-        "add_json": pq.read_table(side, columns=["add_json"])
-        .column("add_json")
-    })
-    pq.write_table(old, side)  # regress to the pre-typed layout
-    n = CHECKPOINT_INTERVAL + 2
-    assert ds.read(ref).count() == n * 5  # resolution still whole
-    snap = resolve_snapshot(ref.path)
-    assert ds._files_matching_predicate(
-        ref.path, snap, "pk = 3"
-    ) == ds._files_matching_predicate(ref.path, _dict_twin(snap), "pk = 3")
-    # keep_last must leave the v20 checkpoint usable as the floor
-    ds.clean_log(ref, keep_last=1, min_age_sec=0.0)
-    names = set(pq.ParquetFile(side).schema_arrow.names)
-    assert "path" in names and "min::pk" in names  # upgraded in place
-    assert ds.read(ref).count() == n * 5
 
 
 def test_tail_overrides_fold_into_meta(spark, ds, sidecar_template, tmp_path,
@@ -417,7 +387,7 @@ def test_or_pruning_typed_and_dict_agree(spark, ds, sidecar_template, tmp_path,
                                          monkeypatch):
     ref = _sidecar_table(sidecar_template, tmp_path, monkeypatch)
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref.path, lazy)
     for pred in [
         "pk = 3 OR pk = 47",
         "(pk < 5 AND name = 'n0001') OR (pk >= 100 AND pk < 105)",
@@ -470,3 +440,13 @@ def test_non_partition_predicate_skips_jvm_partition_eval(
     monkeypatch.setattr(ds.spark, "createDataFrame", boom)
     got = ds._files_matching_predicate(ref.path, snap, "pk = 3")
     assert got == stats_only  # stats skipping unaffected, no JVM eval
+
+
+def test_inline_table_resolves_to_lazy_adds(spark, ds, tmp_path):
+    """A table with no sidecar resolves to the same live-set type."""
+    ref = TableRef(path=str(tmp_path / "one"))
+    ds.create(ref, T._parse_datatype_string(SCHEMA), partition_by=["part"])
+    ds.append(spark.createDataFrame(_mk_rows(0, 3), SCHEMA), ref)
+    files = resolve_snapshot(ref.path).files
+    assert isinstance(files, LazyAdds)
+    assert len(files) == len(dict(files)) >= 1

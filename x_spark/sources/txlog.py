@@ -255,11 +255,13 @@ class TxnAlreadyCommittedException(ConcurrentWriteException):
 class Snapshot:
     """Resolved table state at one version: schema, partitioning,
     table configuration (constraints live under ``constraint.<name>``
-    keys, Delta's convention), and the live file set (relative path ->
-    add-action dict)."""
+    keys, Delta's convention), and the live file set — a
+    :class:`LazyAdds` (relative path -> add-action dict, plus the
+    columnar metadata plane) whatever the table's size or checkpoint
+    format."""
 
     def __init__(self, version: int, schema_json: str, partition_cols: list[str],
-                 files: dict[str, dict],
+                 files: "LazyAdds",
                  configuration: dict[str, str] | None = None,
                  row_id_high: int = -1):
         self.version = version
@@ -375,7 +377,9 @@ def _stat_sidecar_kind(declared) -> str | None:
     (string, plus the types whose footer stats JSON-serialize as
     strings: date/timestamp/decimal — lexicographic order matches for
     the ISO shapes, exact re-parse for decimal). None = the type never
-    participates in stats pruning (bool, binary, nested)."""
+    participates in stats pruning (bool, binary, nested, and strings
+    with a non-binary collation: footer min/max order bytes, so
+    ``'abc'`` falls outside a UTF8_LCASE file holding ``'ABC'``)."""
     from pyspark.sql.types import (  # noqa: PLC0415
         ByteType, DateType, DecimalType, DoubleType, FloatType,
         IntegerType, LongType, ShortType, StringType, TimestampNTZType,
@@ -386,8 +390,10 @@ def _stat_sidecar_kind(declared) -> str | None:
         return "int"
     if isinstance(declared, (FloatType, DoubleType)):
         return "float"
-    if isinstance(declared, (StringType, DateType, TimestampType,
-                             TimestampNTZType, DecimalType)):
+    if isinstance(declared, StringType):
+        return "str" if declared.collation == "UTF8_BINARY" else None
+    if isinstance(declared, (DateType, TimestampType, TimestampNTZType,
+                             DecimalType)):
         return "str"
     return None
 
@@ -671,8 +677,9 @@ def _partition_only(e: dict, partition_cols: list[str]) -> bool:
 
 
 class LazyAdds(Mapping):
-    """The live file set of a sidecar-backed snapshot, JSON-parse
-    deferred. Three access tiers, each touching only what it needs:
+    """The live file set of every snapshot, JSON-parse deferred on its
+    sidecar layers. Three access tiers, each touching only what it
+    needs:
 
     - iteration / ``len`` / ``in`` read the sidecars' ``path`` column
       (no JSON);
@@ -685,6 +692,10 @@ class LazyAdds(Mapping):
       (bulk ``add_json`` read + json.loads), paid only by flows that
       truly rewrite files.
 
+    Delta layers answer every tier from their add dicts, so a table
+    with no sidecar (an inline-JSON checkpoint and its tail) is just
+    delta layers of the same type.
+
     The live set is an ordered stack of LAYERS, merged later-wins:
     ``("sidecar", path)`` — a parquet adds sidecar (the checkpoint's,
     or a large commit's batch — Delta's multi-part-checkpoint
@@ -693,12 +704,11 @@ class LazyAdds(Mapping):
     ``("delta", {path: add|None})`` — small-commit adds/removes in
     replay order. The tail is bounded by CHECKPOINT_INTERVAL commits,
     so the merge is O(tail sidecars + small-commit actions), never
-    O(live set). A pre-typed sidecar (no ``path`` column) degrades
-    every lazy tier to the materialized one transparently.
+    O(live set).
 
-    SNAPSHOT LIFETIME: unlike the old eager parse, a resolved snapshot
-    is backed by the sidecar FILEs on disk, so it stays valid only
-    while those files exist. clean_log's floor refresh may supersede a
+    SNAPSHOT LIFETIME: a resolved snapshot with sidecar layers is
+    backed by the sidecar FILEs on disk, so it stays valid only while
+    those files exist. clean_log's floor refresh may supersede a
     sidecar, but the superseded file is reaped strictly age-guarded
     (``_reap_log_orphans``: only past ``min_age_sec``, default 600 s) —
     a snapshot is therefore safe for any read shorter than the vacuum
@@ -739,9 +749,9 @@ class LazyAdds(Mapping):
 
     def sidecar_columns(self) -> set[str]:
         """Column names present in EVERY sidecar layer (footer-only
-        reads) — the intersection, so a column one layer predates
-        falls back to the materialized tier rather than serving
-        part-missing values."""
+        reads) — the intersection, so a stat column one layer predates
+        (ADD COLUMNS after it was written) reads as None bounds rather
+        than part-missing values."""
         if self._cols is None:
             import pyarrow.parquet as pq  # noqa: PLC0415
 
@@ -761,9 +771,6 @@ class LazyAdds(Mapping):
                 cols = names if cols is None else (cols & names)
             self._cols = cols or set()
         return self._cols
-
-    def typed(self) -> bool:
-        return "path" in self.sidecar_columns()
 
     # -- layered merge core ---------------------------------------------
     def _fold(self, sidecar_cols: list[str], sidecar_row, delta_val):
@@ -790,11 +797,7 @@ class LazyAdds(Mapping):
     def _ensure_live(self) -> None:
         if self._live is not None:
             return
-        if self.typed():
-            alive = self._fold([], lambda: True, lambda a: True)
-            live = list(alive)
-        else:  # pre-typed sidecar: add_json is the only path source
-            live = list(self._materialize())
+        live = list(self._fold([], lambda: True, lambda a: True))
         self._live = live
         self._live_set = frozenset(live)
 
@@ -813,31 +816,11 @@ class LazyAdds(Mapping):
     def _materialize(self) -> dict[str, dict]:
         """The fully-parsed add dicts (bulk ``add_json`` read +
         json.loads per sidecar layer, in layer order). Cached: paid
-        once, only by flows that truly need every dict. Pre-typed
-        sidecars have no ``path`` column — the parsed dict supplies
-        the key instead."""
+        once, only by flows that truly need every dict."""
         if self._full is None:
-            if self.typed():
-                self._full = self._fold(
-                    ["add_json"], lambda s: json.loads(s), lambda a: a
-                )
-            else:
-                out: dict[str, dict] = {}
-                for kind, payload in self._layers:
-                    if kind == "sidecar":
-                        col = self._read_one(
-                            payload, ["add_json"]
-                        ).column("add_json")
-                        for s in col.to_pylist():
-                            a = json.loads(s)
-                            out[a["path"]] = a
-                    else:
-                        for p, a in payload.items():
-                            if a is None:
-                                out.pop(p, None)
-                            else:
-                                out[p] = a
-                self._full = out
+            self._full = self._fold(
+                ["add_json"], lambda s: json.loads(s), lambda a: a
+            )
         return self._full
 
     def __getitem__(self, key):
@@ -847,13 +830,9 @@ class LazyAdds(Mapping):
     def field_map(self, col: str, field: str,
                   decode: bool = False) -> dict[str, object]:
         """path -> one per-file metadata value for the live set, from
-        a typed sidecar column (delta-layer adds extracted from their
-        dicts). A column any sidecar predates falls back to the
-        materialized dicts — correct, just unlazy."""
-        if col not in self.sidecar_columns():
-            return {
-                p: a.get(field) for p, a in self._materialize().items()
-            }
+        a typed sidecar column (every sidecar carries ``size``,
+        ``num_records``, ``dv_json`` and ``clustered_by``; delta-layer
+        adds extracted from their dicts)."""
         return self._fold(
             [col],
             (lambda v: json.loads(v) if v else None) if decode
@@ -921,55 +900,6 @@ class LazyAdds(Mapping):
         return paths, stats, pvs
 
 
-def _files_meta(snap, stat_kinds: dict[str, str], pv_phys: list[str],
-                ) -> tuple[list[str], dict[str, tuple[list, list]],
-                           dict[str, list]]:
-    """``(paths, {phys: (mins, maxs)}, {phys: pv_values})`` for a
-    snapshot's live set — from the typed sidecar when available
-    (column-pruned parquet read, no add-action deserialization), else
-    extracted from the materialized add dicts (small tables and
-    pre-typed sidecars, where the dict already exists or is cheap)."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.meta(stat_kinds, pv_phys)
-    paths = sorted(files)
-
-    def stat(p: str, key: str, c: str, k: str):
-        return _typed_stat(
-            k, ((files[p].get("stats") or {}).get(key) or {}).get(c)
-        )
-
-    stats = {
-        c: ([stat(p, "minValues", c, k) for p in paths],
-            [stat(p, "maxValues", c, k) for p in paths])
-        for c, k in stat_kinds.items()
-    }
-    pvs = {
-        c: [(files[p].get("partitionValues") or {}).get(c) for p in paths]
-        for c in pv_phys
-    }
-    return paths, stats, pvs
-
-
-def _files_dv(snap) -> Mapping[str, dict | None]:
-    """path -> dv dict (or None) for the live set — typed-column read
-    on sidecar-backed snapshots, dict extraction otherwise."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.dv_map()
-    return {p: a.get("dv") for p, a in files.items()}
-
-
-def _files_field(snap, col: str, field: str,
-                 decode: bool = False) -> dict[str, object]:
-    """path -> one per-file add field for the live set — typed-column
-    read on sidecar-backed snapshots, dict extraction otherwise."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.field_map(col, field, decode=decode)
-    return {p: a.get(field) for p, a in files.items()}
-
-
 def _np_bounds(vals: list, kind: str):
     """(numpy array with null sentinel, validity mask) for a bounds
     column — int64/float64 for the numeric kinds (int stays int64:
@@ -1010,13 +940,15 @@ def _list_log(table: str) -> tuple[list[str], list[str]]:
 
 
 def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
-    """Replay the log up to ``version`` (default: latest). Starts from
-    the newest checkpoint at or below the target so replay cost is
-    bounded by CHECKPOINT_INTERVAL, not table age — and within that
-    tail, a large commit's adds live in a parquet BATCH sidecar
-    (``addBatch`` action) that replays as one lazy columnar layer, so
-    even a 100k-file write between checkpoints never json.loads its
-    adds on the driver."""
+    """Replay the log up to ``version`` (default: latest) into a
+    :class:`LazyAdds` layer stack. Starts from the newest checkpoint at
+    or below the target so replay cost is bounded by
+    CHECKPOINT_INTERVAL, not table age: a parquet checkpoint is one
+    sidecar layer, an inline-JSON one a delta layer. Within that tail,
+    a large commit's adds live in a parquet BATCH sidecar (``addBatch``
+    action) that replays as one lazy columnar layer, so even a
+    100k-file write between checkpoints never json.loads its adds on
+    the driver."""
     commits, checkpoints = _list_log(table)
     if not commits:
         return None
@@ -1031,8 +963,7 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
     row_id_high = -1
     start = 0
     # ordered layer stack (see LazyAdds): ("sidecar", parquet path) |
-    # ("delta", {path: add|None}); stays a plain eager dict unless a
-    # sidecar layer appears anywhere
+    # ("delta", {path: add|None})
     layers: list[tuple[str, object]] = []
     usable = [c for c in checkpoints if _version_of(c) <= target]
     if usable:
@@ -1090,19 +1021,8 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
                     )
     if schema_json is None:
         raise DataSourceException(f"txlog table {table!r} has no metaData action")
-    if any(kind == "sidecar" for kind, _ in layers):
-        live: Mapping = LazyAdds(table, layers)
-    else:
-        files: dict[str, dict] = {}
-        for _, d in layers:
-            for p, a in d.items():  # type: ignore[union-attr]
-                if a is None:
-                    files.pop(p, None)
-                else:
-                    files[p] = a
-        live = files
-    return Snapshot(target, schema_json, part_cols, live, configuration,
-                    row_id_high=row_id_high)
+    return Snapshot(target, schema_json, part_cols, LazyAdds(table, layers),
+                    configuration, row_id_high=row_id_high)
 
 
 # ---------------------------------------------------------------------------
@@ -1325,7 +1245,7 @@ class TxLogDataSource(BaseDataSource):
             )
         pmap = _physical_map(snap.schema)
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        _, _, pvs = _files_meta(snap, {}, pv_phys)
+        _, _, pvs = snap.files.meta({}, pv_phys)
         n = len(next(iter(pvs.values()))) if pvs else 0
         rows = sorted(
             {tuple(pvs[p][i] for p in pv_phys) for i in range(n)},
@@ -1360,8 +1280,8 @@ class TxLogDataSource(BaseDataSource):
             )
         pmap = _physical_map(snap.schema)
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        paths, _, pvs = _files_meta(snap, {}, pv_phys)
-        nrec = _files_field(snap, "num_records", "numRecords")
+        paths, _, pvs = snap.files.meta({}, pv_phys)
+        nrec = snap.files.field_map("num_records", "numRecords")
         agg: dict[tuple, list[int]] = {}
         for i, p in enumerate(paths):
             key = tuple(pvs[c][i] for c in pv_phys)
@@ -1983,7 +1903,7 @@ class TxLogDataSource(BaseDataSource):
         if not rel:
             return self.spark.createDataFrame([], snap.schema)
         cols = [f.name for f in snap.schema.fields]
-        dvs = _files_dv(snap)
+        dvs = snap.files.dv_map()
         masked = [p for p in rel if dvs.get(p)]
         plain = [p for p in rel if not dvs.get(p)]
         parts: list[DataFrame] = []
@@ -2037,7 +1957,7 @@ class TxLogDataSource(BaseDataSource):
                  rels: list[str]) -> DataFrame:
         """Mask rows (``__fn``, ``__ri``) for live files of a snapshot
         (see :meth:`_dv_rows_for`)."""
-        dvs = _files_dv(snap)
+        dvs = snap.files.dv_map()
         return self._dv_rows_for(table, [(p, dvs.get(p)) for p in rels])
 
     def _dv_rows_for(self, table: str,
@@ -2562,20 +2482,13 @@ class TxLogDataSource(BaseDataSource):
             # and reaped by clean_log.
             side = f"{version:020d}.checkpoint.adds.parquet"
             dest = os.path.join(_log_path(table), side)
-            if isinstance(files, LazyAdds) and files.typed():
-                # INCREMENTAL columnar refresh: previous sidecar rows
-                # copy through arrow-side (kill-set filtered), only
-                # tail delta adds serialize fresh — the checkpoint on
-                # a million-file table never json.loads its live set
-                ck["addCount"] = _refresh_typed_sidecar(
-                    files, snap.schema, snap.partition_cols, dest
-                )
-            else:
-                adds = [files[p] for p in sorted(files)]
-                _publish_adds_sidecar(
-                    dest, adds, snap.schema, snap.partition_cols
-                )
-                ck["addCount"] = len(adds)
+            # INCREMENTAL columnar refresh: previous sidecar rows copy
+            # through arrow-side (kill-set filtered), only delta-layer
+            # adds serialize fresh — the checkpoint on a million-file
+            # table never json.loads its live set
+            ck["addCount"] = _refresh_typed_sidecar(
+                files, snap.schema, snap.partition_cols, dest
+            )
             ck["addsParquet"] = side
         else:
             ck["adds"] = [files[p] for p in sorted(files)]
@@ -3331,17 +3244,27 @@ class TxLogDataSource(BaseDataSource):
             raise DataSourceException(f"txlog table {table!r} does not exist")
         return table, snap
 
+    def _expr_refs(self, expr: str, cols: list[str]) -> list[str]:
+        """The names in ``cols`` that the SQL expression ``expr``
+        references (case-insensitive), read from Spark's parse tree.
+        When the tree may hide a reference (a subquery, a star, a
+        qualified name), every name in ``cols`` counts as referenced:
+        a dependency check must refuse rather than miss one."""
+        refs = sql_dml.column_refs(sql_dml.expression(self.spark, expr))
+        if refs is None:
+            return sorted(cols)
+        low = {r.lower() for r in refs}
+        return sorted(c for c in cols if c.lower() in low)
+
     def _column_refs(self, snap: Snapshot, col: str) -> list[str]:
         """Configuration entries (CHECK constraints, generated-column
         expressions) that reference ``col`` — renaming or dropping the
         column would silently break them, so the DDL refuses and names
         the blockers (Delta's dependency check)."""
-        import re
-
-        pat = re.compile(rf"(?i)(?<![\w`.]){re.escape(col)}(?![\w`])")
         refs = [
             k for k, v in snap.configuration.items()
-            if k.startswith(("constraint.", "generated.")) and pat.search(v)
+            if k.startswith(("constraint.", "generated."))
+            and col in self._expr_refs(v, [col])
         ]
         # informational PK/FK: a renamed/dropped key column would
         # silently invalidate the declared key — refuse, like Delta
@@ -4333,15 +4256,8 @@ class TxLogDataSource(BaseDataSource):
             # column refuses with its name (drop it first — the Delta
             # rule), instead of crashing unresolved at validation
             new_cols = {f.name for f in df.schema.fields}
-            import re as _re
-
-            def references_dropped(expr: str) -> list[str]:
-                old_cols = {f.name for f in snap.schema.fields}
-                return sorted(
-                    c for c in old_cols - new_cols
-                    if _re.search(rf"(?i)(?<![\w`.]){_re.escape(c)}(?![\w`])",
-                                  expr)
-                )
+            dropped = [f.name for f in snap.schema.fields
+                       if f.name not in new_cols]
 
             config = {}
             for k, v in snap.configuration.items():
@@ -4349,7 +4265,7 @@ class TxLogDataSource(BaseDataSource):
                         and k.split(".", 1)[1] not in new_cols):
                     continue  # column left; its metadata leaves too
                 if k.startswith(("constraint.", "generated.")):
-                    gone = references_dropped(v)
+                    gone = self._expr_refs(v, dropped)
                     if gone:
                         raise DataSourceException(
                             f"overwrite_schema drops column(s) {gone} "
@@ -5286,8 +5202,8 @@ class TxLogDataSource(BaseDataSource):
         if snap is None:
             return
         stamp = self._cluster_stamp(cluster_by, strategy)
-        stamps = _files_field(snap, "clustered_by", "clusteredBy",
-                              decode=True)
+        stamps = snap.files.field_map("clustered_by", "clusteredBy",
+                                      decode=True)
         if not snap.partition_cols:
             debt = sum(1 for s in stamps.values() if s != stamp)
             if debt < self.AUTO_CLUSTER_MIN_FILES:
@@ -5304,7 +5220,7 @@ class TxLogDataSource(BaseDataSource):
             # unstamped: ingest must never trigger an O(table) rewrite.
             pmap = _physical_map(snap.schema)
             pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-            paths, _stats, pvs = _files_meta(snap, {}, pv_phys)
+            paths, _stats, pvs = snap.files.meta({}, pv_phys)
             debt_by_part: dict[tuple, int] = {}
             for i, p in enumerate(paths):
                 if stamps.get(p) == stamp:
@@ -5521,13 +5437,13 @@ class TxLogDataSource(BaseDataSource):
             raise DataSourceException(f"txlog table {table!r} does not exist")
         stamp = self._cluster_stamp(cluster_by, strategy)
         if incremental:
-            stamps = _files_field(snap, "clustered_by", "clusteredBy",
-                                  decode=True)
+            stamps = snap.files.field_map("clustered_by", "clusteredBy",
+                                          decode=True)
             scope = sorted(p for p, s in stamps.items() if s != stamp)
             if partition_scope is not None and snap.partition_cols:
                 pmap = _physical_map(snap.schema)
                 pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-                paths, _st, pvs = _files_meta(snap, {}, pv_phys)
+                paths, _st, pvs = snap.files.meta({}, pv_phys)
                 tuple_of = {
                     p: tuple(pvs[c][i] for c in pv_phys)
                     for i, p in enumerate(paths)
@@ -5617,8 +5533,7 @@ class TxLogDataSource(BaseDataSource):
             stored = json.load(fh)
         carried = ("txns", "copyLedgers", "rowIdHighWaterMark")
         if (any(k not in stored for k in carried)
-                or ("adds" not in stored and "addsParquet" not in stored)
-                or self._sidecar_needs_upgrade(table, stored)):
+                or ("adds" not in stored and "addsParquet" not in stored)):
             self._write_checkpoint(table, floor)
         for fname in commits + checkpoints:
             v = _version_of(fname)
@@ -5631,24 +5546,6 @@ class TxLogDataSource(BaseDataSource):
             deleted.append(fname)
         self._reap_log_orphans(table, now, min_age_sec, deleted)
         return deleted
-
-    @staticmethod
-    def _sidecar_needs_upgrade(table: str, stored: dict) -> bool:
-        """True when the floor checkpoint references a PRE-TYPED adds
-        sidecar (add_json only, no ``path``/``min::``/``max::``
-        columns) — the floor refresh then rewrites it in the typed
-        layout so the columnar metadata plane covers old tables too.
-        Footer-only read; a missing sidecar is left for the ordinary
-        resolution error to surface."""
-        if "addsParquet" not in stored:
-            return False
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        p = os.path.join(_log_path(table), stored["addsParquet"])
-        try:
-            return "path" not in pq.ParquetFile(p).schema_arrow.names
-        except OSError:
-            return False
 
     def _reap_log_orphans(self, table: str, now: float,
                           min_age_sec: float, deleted: list[str]) -> None:
@@ -5679,9 +5576,11 @@ class TxLogDataSource(BaseDataSource):
             owner_full = os.path.join(_log_path(table), owner)
             if os.path.isfile(owner_full):
                 # Owner exists — but a checkpoint owner may have been
-                # REWRITTEN by clean_log's floor refresh with inline
-                # adds (table shrank below CHECKPOINT_PARQUET_MIN),
-                # and a commit owner may reference a DIFFERENT batch
+                # REWRITTEN by clean_log's floor refresh as an
+                # inline-JSON checkpoint (the live set shrank below
+                # CHECKPOINT_PARQUET_MIN; it resolves as a delta
+                # layer), and a commit owner may reference a DIFFERENT
+                # batch
                 # (race loser). With its owner alive such a sidecar
                 # would never age out: a permanent log-dir leak. Reap
                 # unless the owner still names this sidecar.
@@ -6074,7 +5973,8 @@ class TxLogDataSource(BaseDataSource):
                 def side(entries: list[dict], marker: str) -> DataFrame:
                     s = Snapshot(
                         v, sch.schema_json, sch.partition_cols,
-                        {e["path"]: e for e in entries},
+                        LazyAdds(table, [
+                            ("delta", {e["path"]: e for e in entries})]),
                         sch.configuration,
                     )
                     return (
@@ -6553,7 +6453,7 @@ class TxLogDataSource(BaseDataSource):
         if kind is None or isinstance(lo, bool):
             return sorted(snap.files)  # un-prunable kind: all candidates
         pkey = _physical_map(snap.schema).get(key, key)  # stats keys are PHYSICAL
-        paths, stats, _ = _files_meta(snap, {pkey: kind}, [])
+        paths, stats, _ = snap.files.meta({pkey: kind}, [])
         mins, maxs = stats[pkey]
         fmin, vmin = _np_bounds(mins, kind)
         fmax, vmax = _np_bounds(maxs, kind)
@@ -6680,7 +6580,7 @@ class TxLogDataSource(BaseDataSource):
         def gate(conjs: list) -> list:
             """Type-resolved, literal-kind-gated conjuncts: numeric
             literals prune numeric columns, string literals prune
-            StringType columns ONLY — a string literal
+            binary-collated StringType columns ONLY — a string literal
             lexicographically compared against a timestamp column's
             string-serialized stats could prune a semantically equal
             value ('2024-01-01' vs '2024-01-01 00:00:00'), so those
@@ -6691,7 +6591,8 @@ class TxLogDataSource(BaseDataSource):
                     continue
                 declared = types[c]
                 kind = _stat_sidecar_kind(declared)
-                quoted_ok = isinstance(declared, StringType)
+                quoted_ok = (kind == "str"
+                             and isinstance(declared, StringType))
                 numeric_ok = kind in ("int", "float")
                 if not all((q and quoted_ok) or (not q and numeric_ok)
                            for _, q in lits):
@@ -6708,7 +6609,7 @@ class TxLogDataSource(BaseDataSource):
             disjuncts = []
         stat_kinds = {c: k for d in disjuncts for c, k, _, _ in d}
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        paths, stats, pvs = _files_meta(snap, stat_kinds, pv_phys)
+        paths, stats, pvs = snap.files.meta(stat_kinds, pv_phys)
         keep = np.ones(len(paths), dtype=bool)
         if disjuncts:
             excl_all = np.ones(len(paths), dtype=bool)
