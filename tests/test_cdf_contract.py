@@ -271,15 +271,17 @@ def test_noop_rewrites_are_cdf_invisible(spark, ds, tmp_path):
     assert rows == [1, 2, 3]  # appends only, each exactly once
 
 
-def test_zero_match_cow_ops_are_logical_noops(spark, ds, tmp_path):
+@pytest.mark.parametrize("dv", [False, True])
+def test_zero_match_cow_ops_are_logical_noops(spark, ds, tmp_path, dv):
     """A CDF-enabled UPDATE / DELETE / MERGE whose stats-pruned
     candidates hold ZERO matching rows must not rewrite anything: a
     rewrite with an empty cdc frame may land no cdc part files, and
     the commit would then serve the feed from its derived add/remove
     pairs — spurious delete+insert for every co-located surviving row.
     The operation is a logical no-op: no commit, no version, no feed
-    rows."""
-    ref = _mk(spark, ds, tmp_path)
+    rows. Deletion-vector tables follow the same rule: no empty mask
+    commit."""
+    ref = _mk(spark, ds, tmp_path, dv=dv)
     v0 = resolve_snapshot(ref.path).version
     files0 = set(resolve_snapshot(ref.path).files)
 

@@ -381,6 +381,20 @@ def test_dv_sql_surface(spark, ds, tmp_path):
         assert sorted((r.pk, r._change_type) for r in out.collect()) == [
             (i, "delete") for i in range(3)
         ]
+        # SQL MERGE masks the matched rows too: the old file stays live
+        ds._execute_statement(
+            f"MERGE INTO {name} t USING (SELECT * FROM VALUES (4, 'u4'), "
+            "(5, 'u5'), (42, 'n42') AS v(pk, s)) src ON t.pk = src.pk "
+            "WHEN MATCHED THEN UPDATE SET s = src.s "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+        snap = resolve_snapshot(table)
+        assert files_before <= set(snap.files)
+        assert sum(a["dv"]["cardinality"]
+                   for a in snap.files.values() if a.get("dv")) == 5
+        got = {r.pk: r.s for r in ds.read(ref).collect()}
+        assert got == {**{i: f"r{i}" for i in range(3, 10)},
+                       4: "u4", 5: "u5", 42: "n42"}
     finally:
         ds.drop_table(ref)
 
@@ -449,15 +463,23 @@ def test_update_cow_ansi_semantics(spark, ds, tmp_path):
         ds.update(ref, {"nope": "1"}, "TRUE")
 
 
-def test_update_recomputes_generated_columns(spark, ds, tmp_path):
+@pytest.mark.parametrize("dv", [False, True])
+def test_update_recomputes_generated_columns(spark, ds, tmp_path, dv):
     ref = TableRef(path=str(tmp_path / "g"))
     ds.append(spark.createDataFrame(
         [(1, 5, 10), (2, 6, 12)], "pk int, v int, dbl int"
     ), ref)
     ds.set_generated_column(ref, "dbl", "v * 2")
+    if dv:
+        ds.set_properties(ref, {DV_ENABLE_KEY: "true"})
     ds.update(ref, {"v": "v + 1"}, "pk = 1")
     got = {r.pk: (r.v, r.dbl) for r in ds.read(ref).collect()}
     assert got == {1: (6, 12), 2: (6, 12)}
+    # a MERGE that sets v recomputes dbl on matched and inserted rows
+    ds.merge(spark.createDataFrame([(2, 8), (3, 9)], "pk int, v int"), ref,
+             MergeSpec(["pk"], ["v"], insert_when_not_matched=True))
+    got = {r.pk: (r.v, r.dbl) for r in ds.read(ref).collect()}
+    assert got == {1: (6, 12), 2: (8, 16), 3: (9, 18)}
 
 
 def test_update_with_dv_masks_old_images(spark, ds, tmp_path):

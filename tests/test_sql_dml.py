@@ -740,6 +740,21 @@ def test_txlog_name_used_as_output_alias_is_left_alone(spark, ds):
     assert _rows(out) == [(3,)]
 
 
+def test_qualified_columns_under_tablesample(spark, ds):
+    """An unaliased txlog reference under TABLESAMPLE gets its name as
+    an alias after the sample clause (an alias cannot precede it), so
+    ``t.col`` resolves; a user alias after TABLESAMPLE is kept."""
+    t = _name("ts")
+    ds.sql(f"CREATE TABLE {t} (pk INT) USING txlog")
+    ds.sql(f"INSERT INTO {t} VALUES (1), (2), (3), (4)")
+    assert _rows(ds.sql(f"SELECT {t}.pk FROM {t} TABLESAMPLE (100 PERCENT) "
+                        f"WHERE {t}.pk < 3")) == [(1,), (2,)]
+    assert _rows(ds.sql(f"SELECT x.pk FROM {t} TABLESAMPLE (100 PERCENT) "
+                        "AS x WHERE x.pk > 2")) == [(3,), (4,)]
+    assert ds.sql(f"SELECT {t}.pk FROM {t} TABLESAMPLE (2 ROWS)").count() == 2
+    assert _rows(ds.sql(f"TABLE {t} LIMIT 4")) == [(1,), (2,), (3,), (4,)]
+
+
 def _partitioned(ds):
     pt = _name("pt")
     ds.sql(f"CREATE TABLE {pt} (v INT, p STRING) USING txlog "

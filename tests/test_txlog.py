@@ -995,6 +995,33 @@ def test_txn_replay_detected_inside_commit(spark, ds, tmp_path):
     assert rows[1] == 444 and rows[2] == 555
 
 
+@pytest.mark.parametrize("dv", [False, True])
+def test_txn_stamped_noop_merge_still_stamps(spark, ds, tmp_path, dv):
+    """A txn-stamped MERGE that touches no row still commits its stamp
+    (alone, no data actions), on copy-on-write and deletion-vector
+    tables alike: otherwise a replay of the epoch after another writer
+    added a matching row would apply a batch whose first run changed
+    nothing."""
+    from x_spark.sources.txlog import (
+        DV_ENABLE_KEY, TxnAlreadyCommittedException,
+    )
+
+    ref = _ref(tmp_path)
+    ds.append(spark.createDataFrame([(1, 10), (3, 30), (5, 50)],
+                                    "pk int, v int").coalesce(1), ref)
+    if dv:
+        ds.set_properties(ref, {DV_ENABLE_KEY: "true"})
+    files = set(resolve_snapshot(ref.path).files)
+    src = spark.createDataFrame([(2, 99)], "pk int, v int")
+    ds.merge(src, ref, MergeSpec(["pk"], ["v"]), txn=("app", 7))
+    assert ds.last_txn_version(ref, "app") == 7
+    assert set(resolve_snapshot(ref.path).files) == files
+    ds.append(spark.createDataFrame([(2, 20)], "pk int, v int"), ref)
+    with pytest.raises(TxnAlreadyCommittedException):
+        ds.merge(src, ref, MergeSpec(["pk"], ["v"]), txn=("app", 7))
+    assert _rows(ds.read(ref)) == [(1, 10), (2, 20), (3, 30), (5, 50)]
+
+
 def test_txn_stamped_append_is_idempotent(spark, ds, tmp_path):
     """Add-only commits accept the same txnAppId/txnVersion stamp as
     MERGE/OVERWRITE (Delta's writer options on append) — the streaming

@@ -17,6 +17,14 @@ makes the semantics oracle-checkable as plain SQL.
 
 Scale notes: one shuffle of each side on the primary key; AQE handles
 skewed keys. No driver-side materialization.
+
+This is the reference algebra for the connectors that merge by
+rewriting a whole table or partition (DuckDB, JDBC, parquet catalog)
+and for the relational plans. txlog tables do not use it: their
+DELETE, UPDATE and MERGE all run through one row-level engine,
+``x_spark.sources.sql_dml._merge_into_once``, which stages one
+target-slice x source join and writes it copy-on-write or as
+deletion-vector masks.
 """
 
 from __future__ import annotations
@@ -104,75 +112,3 @@ def merge_frames(tgt: DataFrame, src: DataFrame, spec: MergeSpec,
     )
     return updated.unionByName(inserts)
 
-
-def merge_split_frames(
-    tgt: DataFrame, src: DataFrame, spec: MergeSpec, meta_cols: list[str],
-    insert_defaults: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame | None]:
-    """Merge-on-read decomposition of the same MERGE algebra: instead
-    of the full post-merge state, return
-
-    - ``matched_meta``: the ``meta_cols`` (row-position columns the
-      caller threaded through ``tgt``, e.g. file name + row index) of
-      every target row that MATCHES — the rows to mask,
-    - ``matched_pre``: those rows' OLD images (the change feed's
-      ``update_preimage`` rows, free from the same pin),
-    - ``matched_post``: their post-merge images, and
-    - ``inserts``: the unmatched source inserts (None when the spec
-      is update-only) — the caller appends ``matched_post UNION
-      inserts``.
-
-    Untouched target rows never appear in any frame: at 100 TB this
-    is the difference between a MERGE whose write cost tracks the
-    CHANGED rows and one that rewrites every candidate file.
-    Row-for-row equivalent to :func:`merge_frames` by construction:
-    matched images here are the inner-join restriction of its
-    left-join ``when(matched, ...)`` images, and the insert branch is
-    identical. The matched join is eagerly checkpointed and carries
-    BOTH images (old set-column values ride as ``__pre_`` columns) —
-    the expensive target-slice x source join runs ONCE and feeds the
-    mask write, the data write, and all the change-feed rows.
-    """
-    if spec.validate_unique_source_keys:
-        check_unique_source_keys(src, spec)
-    tgt_cols = [c for c in tgt.columns if c not in set(meta_cols)]
-    tgt_dtypes = dict(tgt.dtypes)
-    set_cols = set(spec.all_set_columns)
-    missing = [c for c in set_cols if c not in tgt_cols]
-    if missing:
-        raise ETLJobException(f"merge columns {missing} not present in target")
-
-    src_marked = src.withColumn(_SRC_MARKER, F.lit(True)).alias("SRC")
-    pk_cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"TGT.{c}") == F.col(f"SRC.{c}") for c in spec.primary_key_columns],
-    )
-    cond = pk_cond & F.expr(spec.extra_target_predicate)
-
-    matched_j = tgt.alias("TGT").join(src_marked, cond, "inner").select(
-        *[F.col(f"TGT.{m}").alias(m) for m in meta_cols],
-        *[
-            (
-                F.col(f"SRC.{c}").cast(tgt_dtypes[c]).alias(c)
-                if c in set_cols
-                else F.col(f"TGT.{c}").alias(c)
-            )
-            for c in tgt_cols
-        ],
-        # old values of the set columns (pre/post differ only there)
-        *[F.col(f"TGT.{c}").alias(f"__pre_{c}")
-          for c in tgt_cols if c in set_cols],
-    ).localCheckpoint(eager=True)
-    matched_meta = matched_j.select(*meta_cols)
-    matched_post = matched_j.select(*tgt_cols)
-    matched_pre = matched_j.select(*[
-        (F.col(f"__pre_{c}") if c in set_cols else F.col(c)).alias(c)
-        for c in tgt_cols
-    ])
-    if not spec.insert_when_not_matched:
-        return matched_meta, matched_pre, matched_post, None
-    inserts = src_marked.join(tgt.alias("TGT"), cond, "left_anti").select(
-        *[_insert_col(c, set_cols, tgt_dtypes, insert_defaults)
-          for c in tgt_cols]
-    )
-    return matched_meta, matched_pre, matched_post, inserts

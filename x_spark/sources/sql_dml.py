@@ -31,12 +31,16 @@ it into the plain values the executors below consume:
 Predicates are read from Spark's parse tree too (:func:`expression`):
 footer-stats pruning, the partition-only check and the MERGE key.
 
-Scale shape of the merge executor: candidate files are pruned by
-footer key-range overlap before anything is read; one target-slice x
-source full-outer join, staged by one SQL projection, streams straight
-into the table write. It is localCheckpoint-pinned only when a second
-job reads it (the change-feed rows, the multiple-match check) — one
-join total, cost tracks the candidate slice, never the table.
+Scale shape of the row-level engine (``_merge_into_once``, which also
+runs ``TxLogDataSource.delete`` and ``update``): candidate files are
+pruned by footer stats before anything is read; one target-slice x
+source full-outer join (DELETE/UPDATE: the slice alone), staged by one
+SQL projection, streams straight into the table write — a rewrite of
+the candidates, or with deletion vectors a mask plus the new images.
+It is localCheckpoint-pinned only when two jobs read it (the
+change-feed rows, the multiple-match check, a mask write plus a data
+write) — one join total, cost tracks the candidate slice, never the
+table.
 """
 
 from __future__ import annotations
@@ -138,7 +142,7 @@ class Statement:
         return self.plan.children().apply(0)
 
     def walk(self):
-        """Yield ``(node, kind, parent kind)`` over every plan node:
+        """Yield ``(node, kind, parent node)`` over every plan node:
         children, CTE bodies and expression subqueries (the last two
         are a node's ``innerChildren`` — ``children()`` omits them)."""
         stack = [(self.plan, None)]
@@ -151,7 +155,7 @@ class Statement:
             if kind not in leaves:
                 kids = (self.items(node.children())
                         + self.items(node.innerChildren()))
-                stack.extend((k, kind) for k in reversed(kids))
+                stack.extend((k, node) for k in reversed(kids))
 
 
 # -- expression reader (pruning, partition-only check, MERGE key, MV) --
@@ -655,43 +659,58 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                      skip_match_checks: bool = False,
                      meta_actions: list[dict] | None = None,
                      write_schema=None,
-                     src_key_bounds: tuple | None = None) -> None:
-    """One merge attempt against the current (or given) snapshot.
+                     src_key_bounds: tuple | None = None,
+                     candidates: list[str] | None = None,
+                     operation: str = "MERGE") -> None:
+    """One attempt of a row-level DML statement against the current (or
+    given) snapshot: the one engine behind MERGE (MergeSpec and SQL
+    ``MERGE INTO``), DELETE and UPDATE.
 
-    The target slice (key-pruned candidate files) full-outer joins the
-    source once. One ``selectExpr`` of SQL text over the aliased join
+    The target slice (the candidate files) full-outer joins the source
+    once. DELETE and UPDATE have no source: the slice itself is staged
+    with an empty source side, and their predicate and assignments ride
+    as a NOT MATCHED BY SOURCE clause. One ``selectExpr`` of SQL text
     stages every row: ``__code`` names the clause that fired (``m<i>``
     matched, ``i<i>`` insert, ``s<i>`` not matched by source, else
     ``keep`` for an untouched target row and ``drop`` for an unused
     source row), and each target column holds the row's written image
     — update assignments and insert images are CASE arms over the old
-    value. The written rows are the one branch ``__code NOT IN
-    (<delete codes>, 'drop')``, streamed straight into
-    ``_write_files``.
+    value, so every clause reads the old row image.
+
+    The table's ``enableDeletionVectors`` property picks the output.
+    Copy-on-write removes the candidate files and writes the kept,
+    updated and inserted rows. Deletion vectors mask the updated and
+    deleted rows (``_mask_actions``, which also decides the removes)
+    and write only the updated and inserted rows. With the change feed
+    on, cdc files carry the exact change rows, unless deletion vectors
+    are on and the clauses can only delete: the mask delta already is
+    the exact feed.
 
     A ``DataFrame.observe`` count of touched rows (updated, inserted or
     deleted) rides the first job over the staged rows. Zero touched
-    rows is a logical no-op and commits nothing: a rewrite would only
-    churn files and emit spurious delete+insert change-feed pairs for
-    co-located surviving rows. Unpinned, that first job is the table
-    write, and ``_write_files`` discards the staged files before
-    publishing them.
+    rows is a logical no-op and publishes no file: a rewrite would only
+    churn files and emit spurious change-feed pairs. A ``txn`` stamp
+    still commits, alone, so a replay of the epoch is refused; without
+    one nothing commits.
 
-    The staged rows are pinned (``_tracked_local_ckpt``) only when a
-    second job reads them: the change-feed write (CDF on) or the
-    multiple-match check (``skip_match_checks`` False with a WHEN
-    MATCHED clause). Identity allocation pins the written rows itself.
-    Otherwise the join runs once, inside the write job.
+    The staged rows are pinned (``_tracked_local_ckpt``) only when two
+    jobs read them: the change-feed write, the multiple-match check
+    (``skip_match_checks`` False with a WHEN MATCHED clause), or a mask
+    write plus a data write. Identity allocation pins the written rows
+    itself. Otherwise the staged rows stream straight into their one
+    write.
 
     ``src_df``/``snap`` short-circuit resolution for API callers that
-    already hold them (the MergeSpec path); ``skip_match_checks``
-    drops the multiple-match guard AND the per-target-row residue
-    dedup when the caller has already guaranteed unique source keys
-    on an equi ON. ``txn`` stamps the commit for idempotent replay.
-    ``src_key_bounds`` is ``(source key column, min, max)`` when the
-    caller already measured the source key range in a fused pass —
-    the candidate pruning then skips its own source-plan job (used
-    only if the extracted equi key matches)."""
+    already hold them. ``candidates`` are the files a DELETE/UPDATE
+    predicate could not prune (MERGE prunes by key range here).
+    ``skip_match_checks`` drops the multiple-match guard AND the
+    per-target-row residue dedup when the caller has already
+    guaranteed unique source keys on an equi ON, or has no source.
+    ``txn`` stamps the commit for idempotent replay; ``operation``
+    names it. ``src_key_bounds`` is ``(source key column, min, max)``
+    when the caller already measured the source key range in a fused
+    pass — the candidate pruning then skips its own source-plan job
+    (used only if the extracted equi key matches)."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -709,18 +728,18 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         merge_schema = ms.schema_evolution
     ta = ms.target_alias or _last(ms.target)
     src_txt = ms.source_sql.strip()
+    sa = ms.source_alias
     if src_df is not None:
-        sa = ms.source_alias or "SRC"
+        sa = sa or "SRC"
     elif src_txt.startswith("("):
-        if ms.source_alias is None:
+        if sa is None:
             raise DataSourceException(
                 "MERGE INTO: a subquery source needs an alias"
             )
         src_df = ds._query(src_txt[1:-1])
-        sa = ms.source_alias
-    else:
+    elif src_txt:
         src_df = ds._query(f"SELECT * FROM {src_txt}")
-        sa = ms.source_alias or _last(src_txt)
+        sa = sa or _last(src_txt)
 
     if meta_actions is None:  # API callers pass the already-computed fold
         meta_actions = (ds._schema_evolution_actions(src_df.schema, snap)
@@ -734,7 +753,7 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
             write_schema = snap.schema
     tgt_cols = [f.name for f in write_schema.fields]
     types = {f.name: sql_type(f.dataType) for f in write_schema.fields}
-    src_cols = src_df.columns
+    src_cols = src_df.columns if src_df is not None else []
 
     # identity guard: no clause may assign or insert an identity column
     ident = set(snap.identity)
@@ -756,41 +775,54 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                 )
 
     base = snap.version
+
+    def no_op() -> None:
+        if txn is not None:
+            ds._commit(table, ds._expect_unchanged(table, base), [],
+                       operation, txn=txn)
+
     # key-range pruning is only sound when unmatched target rows are
     # untouched: a WHEN NOT MATCHED BY SOURCE clause acts on EXACTLY the
     # rows pruning would skip (Delta disables file pruning the same
     # way), so it forces the full candidate set
-    key = None if ms.by_source else equi_key(
-        expression(spark, ms.on), ta, sa, tgt_cols, src_cols)
-    if key is not None:
-        tcol, scol = key
-        keyed = src_df.selectExpr(
-            f"{quote_ident(scol)} AS {quote_ident(tcol)}")
-        candidates = ds._files_overlapping_keys(
-            keyed, snap, tcol,
-            bounds=(src_key_bounds[1], src_key_bounds[2])
-            if src_key_bounds is not None and src_key_bounds[0] == scol
-            else None,
-        )
-    else:
-        candidates = sorted(snap.files)
+    if candidates is None:
+        key = None if ms.by_source else equi_key(
+            expression(spark, ms.on), ta, sa, tgt_cols, src_cols)
+        if key is not None:
+            tcol, scol = key
+            keyed = src_df.selectExpr(
+                f"{quote_ident(scol)} AS {quote_ident(tcol)}")
+            candidates = ds._files_overlapping_keys(
+                keyed, snap, tcol,
+                bounds=(src_key_bounds[1], src_key_bounds[2])
+                if src_key_bounds is not None
+                and src_key_bounds[0] == scol else None,
+            )
+        else:
+            candidates = sorted(snap.files)
     if not candidates and not ms.not_matched:
-        return  # no target row to touch and no insert clause: a no-op
+        return no_op()  # no target row to touch and no insert clause
 
+    dv = ds._dv_enabled(snap.configuration)
+    # deletion vectors mask the old images of updated and deleted
+    # candidate rows, named by file and row index
+    mask = dv and bool(candidates) and bool(ms.matched or ms.by_source)
     # id-aware when row tracking is on: carried target rows (kept AND
     # updated) keep their stable _x_row_id in the rewritten files
-    tslice = ds._read_for_rewrite(table, snap, candidates)
+    tslice = ds._read_for_rewrite(table, snap, candidates, keep_meta=mask)
     carry = [c for c in ("_x_row_id", "_x_rcv") if c in tslice.columns]
     if meta_actions:
         tslice = ds._widen_frame(tslice, write_schema)
-    cdf = ds._cdf_enabled(snap.configuration)
     checks = not skip_match_checks
     # per-row ids only feed the multiple-match check and residue dedup
     rid = ["monotonically_increasing_id() AS __rid"] if checks else []
-    t = tslice.selectExpr("*", "true AS __t", *rid).alias(ta)
-    s = src_df.selectExpr("*", "true AS __s", *rid).alias(sa)
-    T, S = quote_ident(ta), quote_ident(sa)
-    joined = t.join(s, F.expr(ms.on), "full_outer")
+    t = tslice.selectExpr("*", "true AS __t", *rid)
+    if src_df is None:  # DELETE / UPDATE: the slice, no source side
+        joined = t.selectExpr("*", "CAST(NULL AS BOOLEAN) AS __s").alias(ta)
+    else:
+        s = src_df.selectExpr("*", "true AS __s", *rid).alias(sa)
+        joined = t.alias(ta).join(s, F.expr(ms.on), "full_outer")
+    T, S = quote_ident(ta), quote_ident(sa or "")
 
     def fired(cond: str | None) -> str:
         return "" if cond is None else f" AND coalesce(({cond}), false)"
@@ -829,6 +861,11 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
     upd_codes = sorted(upd_assign)
     ins_codes = sorted(ins_specs)
     defaults = snap.defaults
+    # copy-on-write rewrites the kept rows too; deletion vectors write
+    # only new images, so clauses that can only delete write no data
+    data_codes = upd_codes + ins_codes + ([] if dv else ["keep"])
+    write_data = bool(upd_codes or ins_codes) or not dv
+    write_cdc = ds._cdf_enabled(snap.configuration) and write_data
 
     def ins_val(cl: InsertClause, c: str) -> str | None:
         """Insert image of column ``c`` for one insert clause: listed
@@ -860,7 +897,9 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         # source-only rows get their own negative id, so the residue
         # dedup window never lumps the inserts into one partition
         staged_cols.append(f"coalesce({T}.__rid, -1 - {S}.__rid) AS __rid")
-    if cdf:
+    if mask:
+        staged_cols += [f"{T}.__fn AS __fn", f"{T}.__ri AS __ri"]
+    if write_cdc:
         staged_cols += [f"CAST({T}.{quote_ident(c)} AS {types[c]}) "
                         f"AS {quote_ident('__old_' + c)}" for c in tgt_cols]
     staged_cols += [image(c) for c in tgt_cols]
@@ -875,7 +914,10 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
         joined.selectExpr("*", code).selectExpr(*staged_cols),
         "__code NOT IN ('keep', 'drop')",
     )
-    pin = cdf or (checks and bool(matched_codes))
+    if dv:  # masks, new images and change rows read touched rows only
+        staged = staged.where("__code NOT IN ('keep', 'drop')")
+    pin = write_cdc or (checks and bool(matched_codes)) or (
+        mask and write_data)
     ckpts: list = []
     ck2: list = []
     try:
@@ -896,48 +938,62 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                         "attempted to modify the same target row"
                     )
             if ds._observed_zero(touched):
-                return
-        rows = work
-        if checks:
-            # per-target-row residue dedup: a row matched by several
-            # sources where at most one clause fired keeps ONE image —
-            # the modifying one when present, else a single kept copy
-            rows = rows.selectExpr(
-                "*", "row_number() OVER (PARTITION BY __rid ORDER BY "
-                "CASE WHEN __code = 'keep' THEN 1 ELSE 0 END) AS __rn",
-            ).where("__rn = 1")
-        out = rows.where(f"__code NOT IN ({_codes(del_codes + ['drop'])})")
-        out_cols = ["__code", *tgt_cols, *carry]
-        for g, gexpr in sorted(snap.generated.items()):
-            if g not in tgt_cols:
-                continue
-            # generated columns not assigned by the firing update
-            # clause recompute from the POST-assignment values (Delta's
-            # rule); on inserted rows NULL means "not set" (explicit
-            # disagreeing values still fail the generated:<col> check
-            # at the write choke point)
-            gen, q = f"CAST(({gexpr}) AS {types[g]})", quote_ident(g)
-            regen_in = [uc for uc in upd_codes if g not in upd_assign[uc]]
-            out = out.selectExpr(*[
-                f"CASE WHEN __code IN ({_codes(regen_in)}) THEN {gen} "
-                f"WHEN __code IN ({_codes(ins_codes)}) AND {q} IS NULL "
-                f"THEN {gen} ELSE {q} END AS {q}"
-                if c == g else quote_ident(c) for c in out_cols
-            ])
-        if snap.identity and ins_codes:
-            out, ck2 = ds._allocate_identity_for_nulls(out, snap)
-        adds = ds._write_files(
-            out.selectExpr(*[quote_ident(c) for c in tgt_cols + carry]),
-            table, snap.partition_cols, schema=write_schema,
-            touched=None if pin else touched,
-        )
-        if adds is None:
-            return
+                return no_op()
+        if mask:
+            removes = ds._mask_actions(
+                table, snap, candidates,
+                work.where(f"__code IN ({_codes(upd_codes + del_codes)})")
+                .selectExpr("__fn AS file_name", "__ri AS row_index"),
+            )
+        else:
+            removes = [{"remove": {"path": p}} for p in candidates]
+        adds: list[dict] = []
+        if write_data:
+            rows = work
+            if checks and not dv:
+                # per-target-row residue dedup: a row matched by
+                # several sources where at most one clause fired keeps
+                # ONE image — the modifying one when present, else a
+                # single kept copy
+                rows = rows.selectExpr(
+                    "*", "row_number() OVER (PARTITION BY __rid ORDER BY "
+                    "CASE WHEN __code = 'keep' THEN 1 ELSE 0 END) AS __rn",
+                ).where("__rn = 1")
+            out = rows.where(f"__code IN ({_codes(data_codes)})")
+            out_cols = ["__code", *tgt_cols, *carry]
+            for g, gexpr in sorted(snap.generated.items()):
+                if g not in tgt_cols:
+                    continue
+                # generated columns not assigned by the firing update
+                # clause recompute from the POST-assignment values
+                # (Delta's rule); on inserted rows NULL means "not set"
+                # (explicit disagreeing values still fail the
+                # generated:<col> check at the write choke point)
+                gen, q = f"CAST(({gexpr}) AS {types[g]})", quote_ident(g)
+                regen_in = [uc for uc in upd_codes
+                            if g not in upd_assign[uc]]
+                out = out.selectExpr(*[
+                    f"CASE WHEN __code IN ({_codes(regen_in)}) THEN {gen} "
+                    f"WHEN __code IN ({_codes(ins_codes)}) AND {q} IS NULL "
+                    f"THEN {gen} ELSE {q} END AS {q}"
+                    if c == g else quote_ident(c) for c in out_cols
+                ])
+            if snap.identity and ins_codes:
+                out, ck2 = ds._allocate_identity_for_nulls(out, snap)
+            adds = ds._write_files(
+                out.selectExpr(*[quote_ident(c) for c in tgt_cols + carry]),
+                table, snap.partition_cols, schema=write_schema,
+                touched=None if pin else touched,
+            )
+            if adds is None:
+                return no_op()
+        if not removes and not adds:
+            return no_op()
         actions = list(ds._fold_identity_meta(
             snap, adds, write_schema, meta_actions))
-        actions += [{"remove": {"path": p}} for p in candidates]
+        actions += removes
         actions += [{"add": a} for a in adds]
-        if cdf:
+        if write_cdc:
             # pre-images and deletes from the staged old values; post
             # images and inserts from the written rows (generated
             # columns and allocated identities included)
@@ -960,6 +1016,6 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
             actions += ds._write_cdc_files(pre.unionByName(post), table,
                                            write_schema, snap.partition_cols)
         ds._commit(table, ds._expect_unchanged(table, base), actions,
-                   "MERGE", txn=txn)
+                   operation, txn=txn)
     finally:
         ds._free_ckpts(spark, ckpts + ck2)

@@ -1343,7 +1343,8 @@ class TxLogDataSource(BaseDataSource):
               r"(?:\s*\.\s*(?:`[^`]+`|[A-Za-z_]\w*))*)")
     # plan parents whose relation child sits in a FROM clause, where an
     # unaliased spliced view needs ``AS <name>`` so ``name.col`` keeps
-    # resolving (``TABLE t`` and ``t TABLESAMPLE ...`` cannot take one)
+    # resolving (``TABLE t`` cannot take one; under ``t TABLESAMPLE
+    # (...)`` the alias follows the sample clause, see _bind)
     _FROM_PARENTS = frozenset((
         "Project", "Filter", "Join", "Aggregate", "Generate", "LateralJoin",
         "MergeIntoTable",
@@ -1723,7 +1724,7 @@ class TxLogDataSource(BaseDataSource):
 
     @staticmethod
     def _relations(st: Statement):
-        """``(node, kind, parent kind, name)`` for every table reference
+        """``(node, kind, parent node, name)`` for every table reference
         of the statement — UnresolvedRelation, RelationTimeTravel and
         table-valued-function nodes (name = the function name), in CTE
         bodies and expression subqueries too — except references to
@@ -1824,8 +1825,17 @@ class TxLogDataSource(BaseDataSource):
                 bind(view, lambda: self.read(TableRef(table=name)))
             else:
                 continue
-            if parent in self._FROM_PARENTS:
-                view += f" AS `{name.split('.')[-1]}`"
+            alias = f" AS `{name.split('.')[-1]}`"
+            pkind = parent.nodeName() if parent is not None else None
+            if pkind in self._FROM_PARENTS:
+                view += alias
+            elif pkind in ("Sample", "LocalLimit"):
+                # ``t TABLESAMPLE (...)``, whose ``n ROWS`` form parses
+                # as a limit: the alias must follow the sample clause
+                o = parent.origin()
+                pstart, pstop = o.startIndex().get(), o.stopIndex().get()
+                if st.sql[pstart:].upper().startswith("TABLESAMPLE"):
+                    sites[pstop + 1] = (pstop, alias)
             sites[start] = (stop, view)
         sql = st.sql
         for start in sorted(sites, reverse=True):
@@ -2067,16 +2077,22 @@ class TxLogDataSource(BaseDataSource):
         )
 
     def _read_for_rewrite(self, table: str, snap: Snapshot,
-                          paths: list[str] | None = None) -> DataFrame:
+                          paths: list[str] | None = None,
+                          keep_meta: bool = False) -> DataFrame:
         """The read every PRESERVING rewrite path (OPTIMIZE / CLUSTER /
-        COMPACT / PURGE / CoW UPDATE / DELETE / MERGE target slice)
+        COMPACT / PURGE / the DELETE / UPDATE / MERGE target slice)
         uses: the plain snapshot scan, plus — when row tracking is on —
         the ``_x_row_id``/``_x_rcv`` carry columns, which ride through
         the rewrite into the new files so every surviving row keeps
-        its stable id."""
-        if not self._row_tracking_on(snap.configuration):
+        its stable id. ``keep_meta=True`` (non-empty ``paths``) also
+        returns ``__fn``/``__ri``, the row positions a deletion-vector
+        mask names."""
+        if self._row_tracking_on(snap.configuration):
+            return self._read_rows_with_ids(table, snap, paths, keep_meta)
+        if not keep_meta:
             return self._read_snapshot(table, snap, paths)
-        return self._read_rows_with_ids(table, snap, paths)
+        return self._read_files_with_meta(table, snap.schema, paths).join(
+            self._dv_rows(table, snap, paths), ["__fn", "__ri"], "left_anti")
 
     @staticmethod
     def _rewrite_cols(snap: Snapshot, df: DataFrame) -> list[str]:
@@ -4520,25 +4536,16 @@ class TxLogDataSource(BaseDataSource):
             else:
                 write_schema = snap.schema
             try:
-                if snap.configuration.get(DV_ENABLE_KEY, "").lower() == "true":
-                    self._merge_with_dv(table, snap, df, spec, txn,
-                                        write_schema, meta_actions,
-                                        src_key_bounds=key_bounds)
-                else:
-                    # copy-on-write MERGE runs through the shared
-                    # single-join engine (sql_dml): one target-slice x
-                    # source join feeds the write (and, pinned, the cdc
-                    # rows when CDF is on); unique source keys are
-                    # already guaranteed above, so the multiple-match
-                    # guard and residue dedup are skipped
-                    _merge_into_once(
-                        self, merge_spec_into(spec), table, txn=txn,
-                        src_df=df, snap=snap, merge_schema=merge_schema,
-                        skip_match_checks=True,
-                        meta_actions=meta_actions,
-                        write_schema=write_schema,
-                        src_key_bounds=key_bounds,
-                    )
+                # unique source keys are already guaranteed above, so
+                # the multiple-match guard and residue dedup are skipped
+                _merge_into_once(
+                    self, merge_spec_into(spec), table, txn=txn,
+                    src_df=df, snap=snap, merge_schema=merge_schema,
+                    skip_match_checks=True,
+                    meta_actions=meta_actions,
+                    write_schema=write_schema,
+                    src_key_bounds=key_bounds,
+                )
                 return
             except TxnAlreadyCommittedException:
                 # replay detected: the epoch is already durable — this
@@ -4573,118 +4580,6 @@ class TxLogDataSource(BaseDataSource):
             }
         }]
 
-    def _merge_with_dv(self, table: str, snap: Snapshot, src: DataFrame,
-                       spec: MergeSpec, txn: tuple[str, int] | None,
-                       write_schema: StructType | None = None,
-                       meta_actions: list[dict] | None = None,
-                       src_key_bounds: tuple | None = None) -> None:
-        """Merge-on-read MERGE: matched target rows are MASKED (their
-        new images plus upsert inserts land in fresh files) and
-        untouched rows co-located in candidate files are never
-        rewritten — write cost tracks the CHANGED rows, not the
-        candidate files. One atomic commit carries the sidecar
-        re-points and the new adds. The split join is pinned ONCE and
-        feeds the mask write, the data write, AND (when the change
-        feed is on) the update_preimage/postimage/insert cdc rows —
-        no second target x source join anywhere."""
-        from x_spark.operators.merge import merge_split_frames
-
-        if write_schema is None:
-            write_schema = snap.schema
-        meta_actions = meta_actions or []
-        base = snap.version
-        candidates = self._files_overlapping_keys(
-            src, snap, spec.primary_key_columns[0],
-            bounds=(src_key_bounds[1], src_key_bounds[2])
-            if src_key_bounds is not None
-            and src_key_bounds[0] == spec.primary_key_columns[0] else None,
-        )
-        if candidates:
-            if self._row_tracking_on(snap.configuration):
-                # id-aware scan (masks applied inside): matched
-                # postimages carry their stable _x_row_id into the new
-                # files; _x_rcv resets below (the rows ARE modified)
-                tgt = self._read_rows_with_ids(table, snap, candidates,
-                                               keep_meta=True)
-            else:
-                tgt = self._read_files_with_meta(table, snap.schema,
-                                                 candidates)
-                tgt = tgt.join(self._dv_rows(table, snap, candidates),
-                               ["__fn", "__ri"], "left_anti")
-        else:
-            tgt = self.spark.createDataFrame(
-                [], snap.schema.add("__fn", "string").add("__ri", "long")
-            )
-        if meta_actions:
-            # schema evolution: widen the target slice (NULL-fill new
-            # columns, upcast widened ones); __fn/__ri pass through
-            tgt = self._widen_frame(tgt, write_schema)
-        matched_meta, matched_pre, matched_post, inserts = \
-            merge_split_frames(tgt, src, spec, ["__fn", "__ri"],
-                               insert_defaults=snap.defaults)
-        carry = [c for c in (ROW_ID_COL, ROW_RCV_COL)
-                 if c in matched_post.columns]
-        if ROW_RCV_COL in carry:
-            # matched postimages are MODIFIED rows: their commit
-            # version falls back to the new file's default
-            matched_post = matched_post.withColumn(
-                ROW_RCV_COL, F.lit(None).cast("long"))
-
-        # generated columns on MERGE: NULL-filled columns mean "not
-        # set" — compute the expression there (matched postimages and
-        # inserts alike; explicit disagreeing values still fail the
-        # generated:<col> check at the write choke point)
-        def fill_generated(frame: DataFrame) -> DataFrame:
-            for col, expr in sorted(snap.generated.items()):
-                if col in frame.columns:
-                    frame = frame.withColumn(
-                        col,
-                        F.when(F.col(col).isNull(), F.expr(expr))
-                        .otherwise(F.col(col)),
-                    )
-            return frame
-
-        matched_post = fill_generated(matched_post)
-        mask = matched_meta.select(
-            F.col("__fn").alias("file_name"),
-            F.col("__ri").alias("row_index"),
-        )
-        _ckpt_ids: list = []
-        if inserts is not None:
-            inserts = fill_generated(inserts)
-            if snap.identity:
-                # Delta allocates identity for MERGE-inserted rows;
-                # matched postimages keep their target values. The
-                # allocated frame is pinned, so the cdc insert rows
-                # below carry the very ids the table holds.
-                inserts, _ckpt_ids = self._allocate_identity_for_nulls(
-                    inserts, snap)
-        new_rows = (matched_post if inserts is None
-                    else matched_post.unionByName(inserts))
-        try:
-            adds = self._write_files(new_rows, table, snap.partition_cols,
-                                     schema=write_schema)
-            actions = list(self._fold_identity_meta(
-                snap, adds, write_schema, meta_actions))
-            actions += self._mask_actions(table, snap, candidates, mask)
-            actions += [{"add": a} for a in adds]
-            if self._cdf_enabled(snap.configuration):
-                cdc = matched_pre.drop(*carry).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(matched_post.drop(*carry).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                ))
-                if inserts is not None:
-                    cdc = cdc.unionByName(inserts.drop(*carry).withColumn(
-                        "_change_type", F.lit("insert")
-                    ))
-                actions += self._write_cdc_files(cdc, table, write_schema,
-                                                 snap.partition_cols)
-        finally:
-            self._free_ckpts(self.spark, _ckpt_ids)
-        self._commit(table, self._expect_unchanged(table, base), actions,
-                     "MERGE", txn=txn)
-
     def last_txn_version(self, ref: TableRef, app_id: str) -> int:
         """Highest committed transaction version for ``app_id``
         (-1 if none) — the read side of the txnAppId/txnVersion
@@ -4705,72 +4600,12 @@ class TxLogDataSource(BaseDataSource):
 
     def delete(self, ref: TableRef, predicate: str) -> None:
         """ANSI DELETE: drop rows where the predicate is TRUE; FALSE or
-        NULL survive. Partition-only predicates rewrite only matching
-        partitions' files.
-
-        With ``enableDeletionVectors=true`` in the table configuration
-        the delete is merge-on-read: matched rows are masked by a DV
-        sidecar instead of rewriting their files — a delete of k rows
-        costs O(k) writes, not O(files-containing-k-rows) rewrites.
-        The copy-on-write path below stays the default."""
-        table = self._table_path(ref)
-        snap = resolve_snapshot(table)
-        if snap is None:
-            raise DataSourceException(f"txlog table {table!r} does not exist")
-        if snap.configuration.get(DV_ENABLE_KEY, "").lower() == "true":
-            self._delete_with_dv(table, snap, predicate)
-            return
-        base = snap.version
-        candidates = self._files_matching_predicate(table, snap, predicate)
-        if not candidates:
-            # stats/partition pruning proved zero matches — still
-            # analyze the predicate so typos error like a full scan
-            self._validate_predicate(snap, predicate)
-            return
-        cdc_actions: list[dict] = []
-        if self._cdf_enabled(snap.configuration):
-            # copy-on-write rewrites whole candidate files, so the
-            # derived (add/remove) feed would emit delete+insert noise
-            # pairs for every surviving co-located row; the cdc files
-            # carry exactly the deleted rows instead. One extra scan
-            # of the candidates, only when CDF is on (Delta pays the
-            # same to fill _change_data). Written FIRST: when the
-            # stats-pruned candidates turn out to hold ZERO matching
-            # rows, Spark may emit no cdc part files at all — the
-            # commit would then serve the feed from the derived pairs,
-            # violating the row-exact contract. An empty cdc write is
-            # the logical-no-op signal: skip the rewrite and the
-            # commit entirely.
-            deleted = self._read_snapshot(table, snap, candidates).filter(
-                F.coalesce(F.expr(predicate), F.lit(False))
-            )
-            if deleted.limit(1).count() == 0:
-                return
-            cdc_actions = self._write_cdc_files(
-                deleted.withColumn("_change_type", F.lit("delete")),
-                table, snap.schema, snap.partition_cols,
-            )
-            if not cdc_actions:
-                return  # belt-and-braces: never commit cdc-less
-        # the deleted-row count rides the rewrite: stats that could not
-        # prune may leave candidates holding no matching row, and
-        # rewriting them would commit a version that changes nothing
-        rows, deleted_n = self._observe_count(
-            self._read_for_rewrite(table, snap, candidates).selectExpr(
-                "*", f"coalesce(({predicate}), false) AS __del"),
-            "__del",
-        )
-        adds = self._write_files(
-            rows.where("NOT __del").drop("__del"),
-            table, snap.partition_cols, schema=snap.schema,
-            touched=deleted_n,
-        )
-        if adds is None:
-            return
-        actions = [{"remove": {"path": p}} for p in candidates]
-        actions += [{"add": a} for a in adds]
-        actions += cdc_actions
-        self._commit(table, self._expect_unchanged(table, base), actions, "DELETE")
+        NULL survive. Runs through the row-level DML engine (see
+        :meth:`_dml_where`): copy-on-write rewrites the candidate files
+        without the deleted rows; with ``enableDeletionVectors=true``
+        the deleted rows are masked instead, so a delete of k rows
+        writes O(k) mask rows and no data file."""
+        self._dml_where(ref, predicate)
 
     @staticmethod
     def _published_parquets(staging: str) -> list[str]:
@@ -4803,14 +4638,14 @@ class TxLogDataSource(BaseDataSource):
             mask.select("file_name", "row_index")
             .write.mode("overwrite").parquet(staging)
         )
-        if not self._published_parquets(staging):
-            shutil.rmtree(staging, ignore_errors=True)
-            return rel, {}  # nothing matched: no sidecar, no re-points
         counts = {
             r["file_name"]: r["n"]
             for r in self.spark.read.parquet(staging)
             .groupBy("file_name").agg(F.count("*").alias("n")).collect()
-        }
+        } if self._published_parquets(staging) else {}
+        if not counts:
+            shutil.rmtree(staging, ignore_errors=True)
+            return rel, {}  # nothing matched: no sidecar, no re-points
         shutil.move(staging, os.path.join(table, rel))
         # vacuum ages by mtime; restamp like _write_files does
         now = None
@@ -4822,6 +4657,10 @@ class TxLogDataSource(BaseDataSource):
     @staticmethod
     def _cdf_enabled(configuration: dict[str, str]) -> bool:
         return configuration.get(CDF_ENABLE_KEY, "").lower() == "true"
+
+    @staticmethod
+    def _dv_enabled(configuration: dict[str, str]) -> bool:
+        return configuration.get(DV_ENABLE_KEY, "").lower() == "true"
 
     def _write_cdc_files(self, df: DataFrame, table: str,
                          schema: StructType,
@@ -4903,215 +4742,63 @@ class TxLogDataSource(BaseDataSource):
             # n == total: fully masked -> plain remove, file dropped
         return actions
 
-    def _delete_with_dv(self, table: str, snap: Snapshot,
-                        predicate: str) -> None:
-        """Merge-on-read DELETE: one commit of :meth:`_mask_actions`
-        over the matched rows — no data file is read beyond the
-        predicate scan, none is rewritten."""
-        base = snap.version
-        candidates = self._files_matching_predicate(table, snap, predicate)
-        if not candidates:
-            # stats/partition pruning proved zero matches — still
-            # analyze the predicate so typos error like a full scan
-            self._validate_predicate(snap, predicate)
-            return
-        live = self._read_files_with_meta(table, snap.schema, candidates)
-        live = live.join(self._dv_rows(table, snap, candidates),
-                         ["__fn", "__ri"], "left_anti")
-        matched = live.filter(
-            F.coalesce(F.expr(predicate), F.lit(False))
-        ).select(
-            F.col("__fn").alias("file_name"),
-            F.col("__ri").alias("row_index"),
-        )
-        actions = self._mask_actions(table, snap, candidates, matched)
-        self._commit(table, self._expect_unchanged(table, base), actions,
-                     "DELETE")
-
     def update(self, ref: TableRef, assignments: dict[str, str],
                predicate: str = "TRUE") -> None:
         """ANSI UPDATE: for rows where the predicate is TRUE, assign
         each column its expression — ALL expressions evaluate against
-        the OLD row image (one select, not sequential withColumns), the
-        standard that makes ``SET a = b, b = a`` a swap. Generated
+        the OLD row image, the standard that makes ``SET a = b, b = a``
+        a swap, and the predicate is not re-evaluated against the new
+        values. Assignments cast to the declared column type. Generated
         columns not explicitly assigned are recomputed from the
         post-assignment values for updated rows; explicitly assigned
         ones are validated by the generated:<col> constraint like any
-        write.
+        write. Runs through the row-level DML engine (see
+        :meth:`_dml_where`): copy-on-write rewrites the candidate files;
+        with ``enableDeletionVectors`` the old images are masked and
+        only the new images are written."""
+        self._dml_where(ref, predicate, assignments)
 
-        Copy-on-write by default (rewrite candidate files, Delta's
-        UPDATE shape, partition-pruned). With ``enableDeletionVectors``
-        the update is merge-on-read: old images are masked and only the
-        NEW images are written — cost tracks the updated rows."""
+    def _dml_where(self, ref: TableRef, predicate: str,
+                   assignments: dict[str, str] | None = None) -> None:
+        """DELETE (``assignments`` None) or UPDATE of the rows where
+        ``predicate`` is TRUE, as one NOT MATCHED BY SOURCE clause of
+        :func:`sql_dml._merge_into_once` over the files footer stats
+        and partition values could not prune."""
+        from x_spark.sources.sql_dml import (
+            MatchedClause, MergeInto, _merge_into_once,
+        )
+
         table = self._table_path(ref)
         snap = resolve_snapshot(table)
         if snap is None:
             raise DataSourceException(f"txlog table {table!r} does not exist")
-        unknown = [c for c in assignments
-                   if c not in {f.name for f in snap.schema.fields}]
-        if unknown:
-            raise DataSourceException(
-                f"UPDATE assigns unknown column(s) {unknown}"
-            )
-        ident_assigned = sorted(set(assignments) & set(snap.identity))
-        if ident_assigned:
-            raise DataSourceException(
-                f"column(s) {ident_assigned} are GENERATED ALWAYS AS "
-                "IDENTITY; values cannot be assigned"
-            )
-        # assignment cast to the DECLARED column type (same rule every
-        # other write path gets via _conform) — without it an
-        # expression of a different type commits parquet files whose
-        # physical type diverges from the pinned schema, and the table
-        # stops being readable
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        if self._row_tracking_on(snap.configuration):
-            # row tracking: updated rows' commit version falls back to
-            # the NEW file's defaultRowCommitVersion (materialize NULL);
-            # untouched co-located rows carry their old version — the
-            # per-row assignment machinery below does both in one pass.
-            # _x_row_id needs no entry: it is a pure passthrough.
-            from pyspark.sql.types import LongType
-
-            assignments = {**assignments,
-                           ROW_RCV_COL: "CAST(NULL AS BIGINT)"}
-            types = {**types, ROW_RCV_COL: LongType()}
-        pred = F.coalesce(F.expr(predicate), F.lit(False))
-
-        def new_image(df: DataFrame, only_matched: bool) -> DataFrame:
-            """Post-update image. ``only_matched``: df holds matched
-            rows only, so assignments apply unconditionally. Otherwise
-            df carries the match flag ``__upd``, computed ONCE from the
-            old row image — the predicate must not be re-evaluated
-            against updated values (SET v = v + 1 WHERE v < 5 would
-            misfire)."""
-            cols = [f.name for f in snap.schema.fields]
-            regen = {c: e for c, e in snap.generated.items()
-                     if c in cols and c not in assignments}
-            if only_matched:
-                out = df.select(*[
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments else F.col(c)
-                    for c in df.columns
-                ])
-                for c, e in sorted(regen.items()):
-                    out = out.withColumn(c, F.expr(e).cast(types[c]))
-                return out
-            out = df.select(
-                *[
-                    F.when(F.col("__upd"),
-                           F.expr(assignments[c]).cast(types[c]))
-                    .otherwise(F.col(c)).alias(c)
-                    if c in assignments else F.col(c)
-                    for c in df.columns
-                ],
-            )
-            # recompute unassigned generated columns from the NEW values
-            for c, e in sorted(regen.items()):
-                out = out.withColumn(
-                    c,
-                    F.when(F.col("__upd"), F.expr(e).cast(types[c]))
-                    .otherwise(F.col(c)),
+        if assignments is not None:
+            unknown = [c for c in assignments
+                       if c not in {f.name for f in snap.schema.fields}]
+            if unknown:
+                raise DataSourceException(
+                    f"UPDATE assigns unknown column(s) {unknown}"
                 )
-            return out.drop("__upd")
-
-        if snap.configuration.get(DV_ENABLE_KEY, "").lower() == "true":
-            base = snap.version
-            candidates = self._files_matching_predicate(
-                table, snap, predicate
-            )
-            if not candidates:
-                self._validate_predicate(snap, predicate)
-                return  # pruning proved zero matches: logical no-op
-            if self._row_tracking_on(snap.configuration):
-                # id-aware scan (masks applied inside): new images
-                # carry each row's stable id into the new files
-                live = self._read_rows_with_ids(
-                    table, snap, candidates, keep_meta=True)
-            else:
-                live = self._read_files_with_meta(
-                    table, snap.schema, candidates
-                ).join(self._dv_rows(table, snap, candidates),
-                       ["__fn", "__ri"], "left_anti")
-            matched, _ckpt_ids = self._tracked_local_ckpt(
-                live.filter(pred)
-            )
-            try:
-                mask = matched.select(
-                    F.col("__fn").alias("file_name"),
-                    F.col("__ri").alias("row_index"),
+            ident_assigned = sorted(set(assignments) & set(snap.identity))
+            if ident_assigned:
+                raise DataSourceException(
+                    f"column(s) {ident_assigned} are GENERATED ALWAYS AS "
+                    "IDENTITY; values cannot be assigned"
                 )
-                actions = self._mask_actions(table, snap, candidates,
-                                             mask)
-                adds = self._write_files(
-                    new_image(matched.drop("__fn", "__ri"), True),
-                    table, snap.partition_cols, schema=snap.schema,
-                )
-                if self._cdf_enabled(snap.configuration):
-                    old = matched.drop("__fn", "__ri",
-                                       ROW_ID_COL, ROW_RCV_COL)
-                    cdc = old.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ).unionByName(new_image(old, True).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    ))
-                    actions += self._write_cdc_files(
-                        cdc, table, snap.schema, snap.partition_cols)
-            finally:
-                # mask + data + cdc jobs all consumed the pin
-                self._free_ckpts(self.spark, _ckpt_ids)
-            self._commit(
-                table, self._expect_unchanged(table, base),
-                actions + [{"add": a} for a in adds], "UPDATE",
-            )
-            return
-        base = snap.version
         candidates = self._files_matching_predicate(table, snap, predicate)
         if not candidates:
             # stats/partition pruning proved zero matches — still
             # analyze the predicate so typos error like a full scan
             self._validate_predicate(snap, predicate)
             return
-        cdc_actions: list[dict] = []
-        if self._cdf_enabled(snap.configuration):
-            # exact change rows: one extra matched-rows scan, only
-            # when CDF is on (the derived feed would otherwise emit
-            # rewrite noise pairs for co-located untouched rows).
-            # Written FIRST: stats-pruned candidates that hold zero
-            # matching rows may produce NO cdc part files — committing
-            # the rewrite then would serve the feed from the derived
-            # pairs (spurious delete+insert for every surviving
-            # co-located row). An empty cdc write means the UPDATE is
-            # a logical no-op: skip the rewrite and the commit.
-            old = self._read_snapshot(table, snap, candidates).filter(pred)
-            if old.limit(1).count() == 0:
-                return
-            cdc = old.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(new_image(old, True).withColumn(
-                "_change_type", F.lit("update_postimage")
-            ))
-            cdc_actions = self._write_cdc_files(cdc, table, snap.schema,
-                                                snap.partition_cols)
-            if not cdc_actions:
-                return  # belt-and-braces: never commit cdc-less
-        # the matched-row count rides the rewrite: zero matches in
-        # candidates the stats could not prune is a logical no-op
-        marked, updated_n = self._observe_count(
-            self._read_for_rewrite(table, snap, candidates)
-            .withColumn("__upd", pred),
-            "__upd",
+        action = "delete" if assignments is None else "update"
+        clause = MatchedClause(predicate, action, assignments)
+        _merge_into_once(
+            self, MergeInto(ref.table or table, "TGT", "", None, "", [], [],
+                            [clause]),
+            table, snap=snap, skip_match_checks=True, candidates=candidates,
+            operation=action.upper(),
         )
-        adds = self._write_files(new_image(marked, False), table,
-                                 snap.partition_cols, schema=snap.schema,
-                                 touched=updated_n)
-        if adds is None:
-            return
-        actions = [{"remove": {"path": p}} for p in candidates]
-        actions += [{"add": a} for a in adds]
-        actions += cdc_actions
-        self._commit(table, self._expect_unchanged(table, base), actions,
-                     "UPDATE")
 
     def truncate(self, ref: TableRef) -> None:
         table = self._table_path(ref)
