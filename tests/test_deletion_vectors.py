@@ -395,6 +395,19 @@ def test_dv_sql_surface(spark, ds, tmp_path):
         got = {r.pk: r.s for r in ds.read(ref).collect()}
         assert got == {**{i: f"r{i}" for i in range(3, 10)},
                        4: "u4", 5: "u5", 42: "n42"}
+        # an insert-only MERGE masks nothing and keeps every old row
+        files_mid = set(snap.files)
+        ds._execute_statement(
+            f"MERGE INTO {name} t USING (SELECT * FROM VALUES (6, 'x6'), "
+            "(43, 'n43') AS v(pk, s)) src ON t.pk = src.pk "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+        snap = resolve_snapshot(table)
+        assert files_mid <= set(snap.files)
+        assert sum(a["dv"]["cardinality"]
+                   for a in snap.files.values() if a.get("dv")) == 5
+        assert {r.pk: r.s for r in ds.read(ref).collect()} == {
+            **got, 43: "n43"}
     finally:
         ds.drop_table(ref)
 
@@ -527,6 +540,8 @@ def test_update_and_merge_refuse_identity_assignment(spark, ds, tmp_path):
     ds.append(spark.createDataFrame([("a",), ("b",)], "s string"), ref)
     with pytest.raises(DataSourceException, match="IDENTITY"):
         ds.update(ref, {"id": "0"}, "TRUE")
+    with pytest.raises(DataSourceException, match="IDENTITY"):
+        ds.update(ref, {"id": "0"}, "s = 'zz'")  # no candidate file
     with pytest.raises(DataSourceException, match="IDENTITY"):
         ds.merge(
             spark.createDataFrame([(1, "x")], "id long, s string"),

@@ -680,11 +680,11 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
     The table's ``enableDeletionVectors`` property picks the output.
     Copy-on-write removes the candidate files and writes the kept,
     updated and inserted rows. Deletion vectors mask the updated and
-    deleted rows (``_mask_actions``, which also decides the removes)
-    and write only the updated and inserted rows. With the change feed
-    on, cdc files carry the exact change rows, unless deletion vectors
-    are on and the clauses can only delete: the mask delta already is
-    the exact feed.
+    deleted rows (``_mask_actions``, which also decides the removes;
+    an insert-only MERGE masks and removes nothing) and write only the
+    updated and inserted rows. With the change feed on, cdc files carry
+    the exact change rows, unless deletion vectors are on and the
+    clauses can only delete: the mask delta already is the exact feed.
 
     A ``DataFrame.observe`` count of touched rows (updated, inserted or
     deleted) rides the first job over the staged rows. Zero touched
@@ -763,7 +763,7 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
             if bad:
                 raise DataSourceException(
                     f"column(s) {bad} are GENERATED ALWAYS AS IDENTITY; "
-                    "MERGE cannot assign them"
+                    f"{operation} cannot assign them"
                 )
     for cl in ms.not_matched:
         if cl.columns:
@@ -945,8 +945,9 @@ def _merge_into_once(ds, ms: MergeInto, table: str,
                 work.where(f"__code IN ({_codes(upd_codes + del_codes)})")
                 .selectExpr("__fn AS file_name", "__ri AS row_index"),
             )
-        else:
-            removes = [{"remove": {"path": p}} for p in candidates]
+        else:  # an insert-only MERGE on a DV table removes nothing
+            removes = [] if dv else [{"remove": {"path": p}}
+                                     for p in candidates]
         adds: list[dict] = []
         if write_data:
             rows = work

@@ -4779,18 +4779,12 @@ class TxLogDataSource(BaseDataSource):
                 raise DataSourceException(
                     f"UPDATE assigns unknown column(s) {unknown}"
                 )
-            ident_assigned = sorted(set(assignments) & set(snap.identity))
-            if ident_assigned:
-                raise DataSourceException(
-                    f"column(s) {ident_assigned} are GENERATED ALWAYS AS "
-                    "IDENTITY; values cannot be assigned"
-                )
         candidates = self._files_matching_predicate(table, snap, predicate)
         if not candidates:
             # stats/partition pruning proved zero matches — still
             # analyze the predicate so typos error like a full scan
             self._validate_predicate(snap, predicate)
-            return
+        # the engine refuses identity assignments even with no candidate
         action = "delete" if assignments is None else "update"
         clause = MatchedClause(predicate, action, assignments)
         _merge_into_once(
