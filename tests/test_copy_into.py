@@ -65,6 +65,18 @@ def test_copy_into_loads_then_skips(spark, ds, tmp_path):
     assert _rows(ds.read(ref)) == [(i, i * 10) for i in range(8)]
 
 
+def test_copy_into_through_delta_datasource(spark, tmp_path):
+    """The ``delta`` datasource (YAML ``datasource: delta``) serves
+    COPY INTO: its append hands the committed adds back, so the loaded
+    row count is reported instead of failing after the commit."""
+    ds = init_datasource("delta", spark)
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, 0, 3)
+    ref = _make_table(ds, tmp_path)
+    assert ds.copy_into(ref, src) == (1, 3)
+    assert _rows(ds.read(ref)) == [(0, 0), (1, 10), (2, 20)]
+
+
 def test_copy_into_incremental_new_files_only(spark, ds, tmp_path):
     src = str(tmp_path / "src")
     _write_batch(spark, src, 0, 5)

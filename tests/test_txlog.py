@@ -102,6 +102,49 @@ def test_dynamic_overwrite_replaces_only_source_partitions(spark, ds, tmp_path):
     assert _rows(ds.read(ref)) == [(3, "b", 30), (9, "a", 90)]
 
 
+@pytest.mark.parametrize("ptype, part", [
+    ("double", "1e20"),
+    ("float", "0.1"),
+    ("timestamp", "'2024-01-01 00:00:00.5'"),
+    ("int", "NULL"),
+])
+def test_dynamic_overwrite_matches_partitions_it_wrote(spark, ds, tmp_path,
+                                                       ptype, part):
+    """The replaced partitions are those of the files the overwrite
+    wrote, matched on Spark's own partition directory names: a double,
+    a float, a fractional-second timestamp or a NULL partition value
+    replaces its old rows instead of keeping them next to the new."""
+    ref = _ref(tmp_path, partition_by=["p"])
+    ds.append(spark.sql(
+        f"SELECT * FROM VALUES (1, CAST({part} AS {ptype})), "
+        f"(2, CAST(7 AS {ptype})) AS t(pk, p)"
+    ), ref)
+    new = spark.sql(f"SELECT 3 AS pk, CAST({part} AS {ptype}) AS p")
+    ds.overwrite_dynamic(new, ref)
+    kept = spark.sql(f"SELECT 2 AS pk, CAST(7 AS {ptype}) AS p")
+    assert _rows(ds.read(ref)) == _rows(kept.unionByName(new))
+
+
+def test_delta_datasource_dynamic_overwrite_takes_txn(spark, tmp_path):
+    """The ``delta`` datasource (YAML ``datasource: delta``) passes
+    ``txn`` through to the transactional store, and refuses it when
+    the name routes to the Spark catalog connector."""
+    ds = init_datasource("delta", spark)
+    ref = _ref(tmp_path, partition_by=["part"])
+    _seed(spark, ds, ref)
+    newer = spark.createDataFrame([(9, "a", 90)], "pk int, part string, v int")
+    ds.overwrite_dynamic(newer, ref, txn=("app", 1))
+    assert _rows(ds.read(ref)) == [(3, "b", 30), (9, "a", 90)]
+    assert ds.last_txn_version(ref, "app") == 1
+
+    name = "txlog_dyn_catalog"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    newer.write.saveAsTable(name)
+    with pytest.raises(DataSourceException, match="transactional-store"):
+        ds.overwrite_dynamic(newer, TableRef(table=name), txn=("app", 2))
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_delete_and_truncate(spark, ds, tmp_path):
     ref = _ref(tmp_path)
     _seed(spark, ds, ref, [(1, "a", 10), (2, "b", 20), (3, None, 30)])
@@ -1487,6 +1530,20 @@ def test_clone_carries_generated_columns(spark, ds, tmp_path):
     assert (4, 8) in _rows(ds.read(dst))
     with pytest.raises(DataSourceException, match="generated"):
         ds.append(spark.createDataFrame([(5, 11)], "pk int, dbl int"), dst)
+
+
+def test_replace_where_checks_source_after_generated_fill(spark, ds,
+                                                           tmp_path):
+    """replaceWhere may name a generated column the source omits: the
+    source rows are filled before the predicate check, and the
+    surviving target rows keep their stored values."""
+    ref = _ref(tmp_path, "gpart", partition_by=["g"])
+    ds.create(ref, spark.createDataFrame([], "pk int, g int").schema)
+    ds.set_generated_column(ref, "g", "pk % 2")
+    ds.append(spark.createDataFrame([(1,), (2,), (3,)], "pk int"), ref)
+    src = spark.createDataFrame([(4,)], "pk int")
+    ds.overwrite(src, ref, replace_where="g = 0")
+    assert _rows(ds.read(ref)) == [(1, 1), (3, 1), (4, 0)]
 
 
 def test_overwrite_schema_replaces_layout_atomically(spark, ds, tmp_path):

@@ -55,7 +55,7 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructField, StructType
@@ -3734,29 +3734,19 @@ class TxLogDataSource(BaseDataSource):
             *[quote_ident(c) for c in have if c not in names],
         )
 
-    def _allocate_identity(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+    def _allocate_identity(self, df: DataFrame,
+                           snap: Snapshot) -> tuple[DataFrame, list]:
         """Reject caller-provided identity values (GENERATED ALWAYS AS
         IDENTITY) and allocate fresh ones above the committed
-        high-water mark — the ONE allocator shared by every
-        insert-shaped write (append, overwrite, replaceWhere source
-        rows, dynamic-partition overwrite).
-
-        Allocation is DENSE and overflow-safe at any partition count:
-        the naive ``high + step * (monotonically_increasing_id() + 1)``
-        stride embeds ``partition_id << 33``, so tens of thousands of
-        partitions with a large step exceed 2^63 and fail the write
-        under ANSI mode. Instead the two-stage ``global_positions``
-        pattern (minus the ordering): pin the frame once
-        (localCheckpoint — the count job and the write job MUST see
-        the same physical partitions), collect per-partition row
-        counts (a few longs on the driver), prefix-sum them into
-        per-partition offsets, and assign
-        ``high + step * (offset[p] + row_in_partition + 1)`` where
-        ``row_in_partition`` is the dense low-33-bit counter of
-        ``monotonically_increasing_id``. Values span exactly
-        ``high + step .. high + step * N`` — unique, strictly beyond
-        the mark in the step's direction, and within ``step * N`` of
-        it regardless of partitioning."""
+        high-water mark: ``high + step * pos``, with ``pos`` the dense
+        1-based global position of :meth:`_dense_positions`. Values
+        span exactly ``high + step .. high + step * N`` — unique,
+        strictly beyond the mark in the step's direction, and within
+        ``step * N`` of it regardless of partitioning. Returns the
+        pinned frame and its checkpoint ids. The one caller is the
+        insert path :meth:`_write_inserts`, which serves every
+        insert-shaped write (append and COPY INTO, full overwrite,
+        replaceWhere source rows, dynamic-partition overwrite)."""
         ident = snap.identity
         if not ident:
             return df, []
@@ -3767,14 +3757,11 @@ class TxLogDataSource(BaseDataSource):
                 "IDENTITY; values cannot be provided"
             )
         pinned, pos, ckpt_ids = self._dense_positions(df)
-        for col in sorted(ident):
-            spec = ident[col]
-            pinned = pinned.withColumn(
-                col,
-                (F.lit(int(spec["high"]))
-                 + F.lit(int(spec["step"])) * pos).cast("long"),
-            )
-        return pinned, ckpt_ids
+        return pinned.withColumns({
+            col: (F.lit(int(spec["high"]))
+                  + F.lit(int(spec["step"])) * pos).cast("long")
+            for col, spec in sorted(ident.items())
+        }), ckpt_ids
 
     @staticmethod
     def _observe_count(df: DataFrame,
@@ -3820,9 +3807,13 @@ class TxLogDataSource(BaseDataSource):
         position column): per-partition row counts collected (a few
         longs on the driver), prefix-summed into offsets, added to the
         dense low-33-bit counter of ``monotonically_increasing_id``.
-        The shared kernel of every identity allocation — overflow-safe
-        at any partition count because positions are DENSE, unlike the
-        raw ``partition_id << 33`` stride."""
+        The pin is required: the count job and the consuming job MUST
+        see the same physical partitions. The shared kernel of every
+        identity allocation — overflow-safe at any partition count
+        because positions are DENSE, unlike the raw
+        ``partition_id << 33`` stride, where tens of thousands of
+        partitions with a large step pass 2^63 and fail the write under
+        ANSI mode."""
         pinned, ckpt_ids = self._tracked_local_ckpt(df)
         counts = {
             r["_p"]: r["n"]
@@ -3866,8 +3857,7 @@ class TxLogDataSource(BaseDataSource):
         # upstream lineage is typically the expensive merge join —
         # without the checkpoint the keep branch would re-execute it
         out, ckpt_ids = self._tracked_local_ckpt(df)
-        for col in sorted(ident):
-            spec = ident[col]
+        for col, spec in sorted(ident.items()):
             keep = out.filter(F.col(col).isNotNull())
             nulls, pos, ids = self._dense_positions(
                 out.filter(F.col(col).isNull()).drop(col)
@@ -3914,15 +3904,54 @@ class TxLogDataSource(BaseDataSource):
                 advanced = True
         return new_config if advanced else None
 
+    def _write_inserts(self, df: DataFrame, table: str, snap: Snapshot,
+                       meta_actions: list[dict] | None = None,
+                       finish: Callable[[DataFrame], DataFrame] | None = None,
+                       ) -> tuple[list[dict], list[dict]]:
+        """The one insert path of append (and COPY INTO), full and
+        replaceWhere overwrite, and dynamic-partition overwrite: allocate
+        identity, fill DEFAULT then generated columns, resolve by name
+        (:func:`_conform`) — or, given mergeSchema's ``meta_actions``
+        ([] when nothing widens), NULL-fill onto the schema they carry —
+        then write and free the allocation checkpoint. ``finish`` maps
+        the prepared rows to the written frame: replaceWhere checks its
+        predicate there (it may name a filled column) and unions the
+        survivors, which must never reach identity allocation. Returns
+        ``(adds, actions)``: the metaData action with the advanced
+        identity marks folded in, then the add actions."""
+        write_schema = snap.schema
+        if meta_actions:
+            write_schema = StructType.fromJson(
+                json.loads(meta_actions[0]["metaData"]["schemaJson"])
+            )
+        df, ckpt_ids = self._allocate_identity(df, snap)
+        try:
+            df = self._fill_generated(self._fill_defaults(df, snap), snap)
+            df = (_conform(df, write_schema) if meta_actions is None
+                  else self._widen_frame(df, write_schema))
+            if finish is not None:
+                df = finish(df)
+            adds = self._write_files(df, table, snap.partition_cols,
+                                     schema=write_schema)
+        finally:
+            # the allocation checkpoint's one consumer (the write job)
+            # is done: free on success AND on an aborted write
+            self._free_ckpts(self.spark, ckpt_ids)
+        meta = self._fold_identity_meta(snap, adds, write_schema,
+                                        meta_actions or [])
+        return adds, meta + [{"add": a} for a in adds]
+
     def append(self, df: DataFrame, ref: TableRef,
                merge_schema: bool = False,
                txn: tuple[str, int] | None = None,
                extra_actions: list[dict] | None = None,
                operation: str = "APPEND") -> list[dict]:
-        """Add-only commit. On version collision the append re-resolves
-        and retries — blind adds commute with any concurrent commit.
-        Returns the committed add actions (footer row counts and stats
-        included) so callers can report metrics without a second scan.
+        """Add-only commit through the insert path
+        (:meth:`_write_inserts`). On version collision the append
+        re-resolves and retries — blind adds commute with any
+        concurrent commit. Returns the committed add actions (footer
+        row counts and stats included) so callers can report metrics
+        without a second scan.
 
         ``extra_actions`` ride verbatim in the SAME commit as the adds
         (after meta/add actions) — the hook :meth:`copy_into` uses to
@@ -3947,77 +3976,25 @@ class TxLogDataSource(BaseDataSource):
         if snap is None:
             self.create(ref, df.schema)
             snap = resolve_snapshot(table)
-
-        ident = snap.identity
-        df, _ckpt_ids = self._allocate_identity(df, snap)
-
-        def schema_actions(current: Snapshot) -> list[dict]:
-            return self._schema_evolution_actions(df.schema, current)
-
-        if merge_schema:
-            meta_actions = schema_actions(snap)
-            if meta_actions:
-                write_schema = StructType.fromJson(
-                    json.loads(meta_actions[0]["metaData"]["schemaJson"])
-                )
-            else:
-                write_schema = snap.schema
-            # generated columns compute when omitted, same as the
-            # plain-append branch (NULL-fill would fail their check)
-            df = self._fill_generated(self._fill_defaults(df, snap), snap)
-            df = df.select(*[
-                # assignment cast to the (possibly widened) table type
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in write_schema.fields
-            ])
-        else:
-            meta_actions = []
-            write_schema = snap.schema
-            df = _conform(self._fill_generated(self._fill_defaults(df, snap), snap), snap.schema)  # by-name + assignment cast, like Delta
-        try:
-            adds = self._write_files(df, table, snap.partition_cols,
-                                     schema=write_schema)
-        finally:
-            # the allocation checkpoint's one consumer (the write job)
-            # is done: free on success AND on an aborted write
-            self._free_ckpts(self.spark, _ckpt_ids)
-        add_actions = [{"add": a} for a in adds]
-        if ident:
-            # fold the advanced high-water marks into ONE metaData
-            # action (log replay keeps only the last) riding in the
-            # SAME commit as the adds — allocation is atomic with the
-            # data, and the commit is read-modify-write (version-
-            # checked below), so concurrent allocators can never both
-            # land on the same range
-            new_config = self._advanced_identity_config(
-                snap, adds, write_schema
-            )
-            if new_config is not None:
-                if meta_actions:
-                    meta_actions[0]["metaData"]["configuration"] = new_config
-                else:
-                    meta_actions = [{
-                        "metaData": {
-                            "schemaJson": write_schema.json(),
-                            "partitionColumns": snap.partition_cols,
-                            "configuration": new_config,
-                        }
-                    }]
+        extra = list(extra_actions or [])
+        meta_actions = (self._schema_evolution_actions(df.schema, snap)
+                        if merge_schema else None)
+        adds, actions = self._write_inserts(df, table, snap, meta_actions)
+        if snap.identity:
+            # the advanced high-water marks ride in the SAME commit as
+            # the adds — allocation is atomic with the data, and the
+            # commit is read-modify-write (version-checked), so
+            # concurrent allocators can never both land on the same range
             self._commit(
                 table, self._expect_unchanged(table, snap.version),
-                meta_actions + add_actions + list(extra_actions or []),
-                operation, txn=txn,
+                actions + extra, operation, txn=txn,
             )
             self._maybe_auto_compact(ref, snap.configuration)
             return adds
         for _ in range(10):
             try:
                 self._commit(table, (self._latest_version(table) or 0) + 1,
-                             meta_actions + add_actions
-                             + list(extra_actions or []),
-                             operation, txn=txn)
+                             actions + extra, operation, txn=txn)
                 self._maybe_auto_compact(ref, snap.configuration)
                 return adds
             except TxnAlreadyCommittedException:
@@ -4035,8 +4012,9 @@ class TxLogDataSource(BaseDataSource):
                 # above stay valid: the pinned-schema reader fills
                 # columns missing from a file with NULL.
                 if merge_schema:
-                    fresh = resolve_snapshot(table)
-                    meta_actions = schema_actions(fresh)
+                    actions = self._schema_evolution_actions(
+                        df.schema, resolve_snapshot(table)
+                    ) + [{"add": a} for a in adds]
                 continue
         raise ConcurrentWriteException(
             f"append to {table!r} lost 10 straight version races"
@@ -4229,6 +4207,10 @@ class TxLogDataSource(BaseDataSource):
         matching partitions' files (data skipping); general predicates
         rewrite files that may hold surviving rows.
 
+        Source rows are inserts through :meth:`_write_inserts`: identity
+        allocates above the committed mark (never reusing replaced
+        rows' values), and the predicate check sees filled columns.
+
         ``overwrite_schema`` (Delta's ``overwriteSchema=true``): the
         full-overwrite commit also replaces the table's schema with
         ``df``'s — including a new ``partition_by`` layout — in the
@@ -4240,8 +4222,8 @@ class TxLogDataSource(BaseDataSource):
 
         ``txn`` stamps the commit for idempotent replay (see
         :meth:`last_txn_version`)."""
-        if (overwrite_schema or partition_by is not None) and \
-                replace_where not in (None, "", "1=1"):
+        full = replace_where in (None, "", "1=1")
+        if (overwrite_schema or partition_by is not None) and not full:
             raise DataSourceException(
                 "overwrite_schema/partition_by require a full overwrite, "
                 "not replaceWhere"
@@ -4254,7 +4236,10 @@ class TxLogDataSource(BaseDataSource):
         if not self.table_exists(ref):
             self.create(ref, df.schema, partition_by=partition_by)
         snap = resolve_snapshot(table)
-        base = snap.version
+        # RMW commit: a concurrent append's files are not in the remove
+        # set, so replacing "the table" requires the snapshot to still
+        # be the latest version
+        removes, operation = sorted(snap.files), "OVERWRITE"
         if overwrite_schema:
             part_cols = (list(partition_by) if partition_by is not None
                          else snap.partition_cols)
@@ -4308,136 +4293,67 @@ class TxLogDataSource(BaseDataSource):
                 )
             adds = self._write_files(df, table, part_cols, schema=stamped,
                                      config_override=config)
-            actions: list[dict] = [{
+            actions = [{
                 "metaData": {
                     "schemaJson": stamped.json(),
                     "partitionColumns": part_cols,
                     "configuration": config,
                 }
-            }]
-            actions += [{"remove": {"path": p}} for p in sorted(snap.files)]
-            actions += [{"add": a} for a in adds]
-            self._commit(table, self._expect_unchanged(table, base), actions,
-                         "OVERWRITE", txn=txn)
-            return
-        # identity parity with append: overwritten-in rows are inserts,
-        # so provided values reject and fresh ones allocate ABOVE the
-        # committed mark (never reused from overwritten rows); the
-        # advanced mark rides the same commit via _advanced_identity_config
-        df, _ckpt_ids = self._allocate_identity(df, snap)
-        df = _conform(self._fill_generated(self._fill_defaults(df, snap), snap), snap.schema)
+            }] + [{"add": a} for a in adds]
+        elif full:
+            _adds, actions = self._write_inserts(df, table, snap)
+        else:
+            pred = F.coalesce(F.expr(replace_where), F.lit(False))
+            removes = self._files_matching_predicate(table, snap,
+                                                     replace_where)
+            survivors = self._read_snapshot(table, snap, removes).filter(~pred)
 
-        def identity_actions(adds: list[dict]) -> list[dict]:
-            new_config = self._advanced_identity_config(
-                snap, adds, snap.schema
-            )
-            if new_config is None:
-                return []
-            return [{
-                "metaData": {
-                    "schemaJson": snap.schema_json,
-                    "partitionColumns": snap.partition_cols,
-                    "configuration": new_config,
-                }
-            }]
+            def finish(rows: DataFrame) -> DataFrame:
+                return survivors.unionByName(rows.filter(
+                    pred
+                    | F.raise_error(F.lit(
+                        "source rows violate replaceWhere predicate "
+                        f"{replace_where!r}"
+                    )).cast("boolean")
+                ))
 
-        if replace_where in (None, "", "1=1"):
-            try:
-                adds = self._write_files(df, table, snap.partition_cols,
-                                         schema=snap.schema)
-            finally:
-                self._free_ckpts(self.spark, _ckpt_ids)
-            actions = identity_actions(adds)
-            actions += [{"remove": {"path": p}} for p in sorted(snap.files)]
-            actions += [{"add": a} for a in adds]
-            # RMW commit: a concurrent append's files are not in the
-            # remove set, so replacing "the table" requires the snapshot
-            # to still be the latest version
-            self._commit(table, self._expect_unchanged(table, base), actions,
-                         "OVERWRITE", txn=txn)
-            return
-        pred = F.coalesce(F.expr(replace_where), F.lit(False))
-        checked = df.filter(
-            pred
-            | F.raise_error(
-                F.lit(f"source rows violate replaceWhere predicate {replace_where!r}")
-            ).cast("boolean")
-        )
-        candidates = self._files_matching_predicate(table, snap, replace_where)
-        survivors = self._read_snapshot(table, snap, candidates).filter(~pred)
-        new_data = survivors.unionByName(checked)
-        try:
-            adds = self._write_files(new_data, table, snap.partition_cols,
-                                     schema=snap.schema)
-        finally:
-            self._free_ckpts(self.spark, _ckpt_ids)
-        actions = identity_actions(adds)
-        actions += [{"remove": {"path": p}} for p in candidates]
-        actions += [{"add": a} for a in adds]
-        self._commit(table, self._expect_unchanged(table, base), actions,
-                     "OVERWRITE_WHERE", txn=txn)
+            _adds, actions = self._write_inserts(df, table, snap,
+                                                 finish=finish)
+            operation = "OVERWRITE_WHERE"
+        self._commit(table, self._expect_unchanged(table, snap.version),
+                     [{"remove": {"path": p}} for p in removes] + actions,
+                     operation, txn=txn)
 
     def overwrite_dynamic(self, df: DataFrame, ref: TableRef,
                           txn: tuple[str, int] | list[tuple[str, int]]
                           | None = None) -> None:
         """Replace exactly the partitions present in ``df`` (whole table
-        when unpartitioned): remove those partitions' files, add the new
-        ones, one atomic commit. Untouched partitions' files are never
-        read or written. ``txn`` stamps the commit for idempotent
-        replay (see :meth:`last_txn_version`) — the partition-scoped
-        IVM refresh lands state + position atomically through this."""
+        when unpartitioned), one atomic commit: the partitions of the
+        files :meth:`_write_inserts` wrote. Both sides parse Spark's own
+        partition directory names, so every partition type matches
+        exactly. Untouched partitions' files are never read or
+        written. ``txn`` stamps the commit for idempotent replay (see
+        :meth:`last_txn_version`) — the partition-scoped IVM refresh
+        lands state + position atomically through this."""
         table = self._table_path(ref, create=True)
         if not self.table_exists(ref):
             self.create(ref, df.schema)
         snap = resolve_snapshot(table)
-        base = snap.version
         if not snap.partition_cols:
             self.overwrite(df, ref, txn=txn)
             return
-        # identity parity with append (see overwrite): allocate fresh,
-        # advance the mark in the same commit
-        df, _ckpt_ids = self._allocate_identity(df, snap)
-        df = _conform(self._fill_generated(self._fill_defaults(df, snap), snap), snap.schema)
-        def render(v):
-            # match hive dir encoding: booleans lowercase, rest via str()
-            if v is None:
-                return None
-            if isinstance(v, bool):
-                return str(v).lower()
-            return str(v)
-
-        incoming = {
-            tuple(render(row[c]) for c in snap.partition_cols)
-            for row in df.select(*snap.partition_cols).distinct().collect()
-        }
+        adds, actions = self._write_inserts(df, table, snap)
         pmap = _physical_map(snap.schema)  # pv keys are PHYSICAL
-        removes = [
-            rel
-            for rel in sorted(snap.files)
-            if tuple(
-                (snap.files[rel].get("partitionValues") or {})
-                .get(pmap.get(c, c))
-                for c in snap.partition_cols
-            )
-            in incoming
-        ]
-        try:
-            adds = self._write_files(df, table, snap.partition_cols,
-                                     schema=snap.schema)
-        finally:
-            self._free_ckpts(self.spark, _ckpt_ids)
-        new_config = self._advanced_identity_config(snap, adds, snap.schema)
-        actions = [] if new_config is None else [{
-            "metaData": {
-                "schemaJson": snap.schema_json,
-                "partitionColumns": snap.partition_cols,
-                "configuration": new_config,
-            }
-        }]
-        actions += [{"remove": {"path": p}} for p in removes]
-        actions += [{"add": a} for a in adds]
-        self._commit(table, self._expect_unchanged(table, base), actions,
-                     "OVERWRITE_DYNAMIC", txn=txn)
+
+        def partition_of(add: dict) -> tuple:
+            pv = add.get("partitionValues") or {}
+            return tuple(pv.get(pmap.get(c, c)) for c in snap.partition_cols)
+
+        written = {partition_of(a) for a in adds}
+        removes = [{"remove": {"path": p}} for p in sorted(snap.files)
+                   if partition_of(snap.files[p]) in written]
+        self._commit(table, self._expect_unchanged(table, snap.version),
+                     removes + actions, "OVERWRITE_DYNAMIC", txn=txn)
 
     def merge(self, df: DataFrame, ref: TableRef, spec: MergeSpec,
               txn: tuple[str, int] | None = None,
@@ -4638,9 +4554,11 @@ class TxLogDataSource(BaseDataSource):
             mask.select("file_name", "row_index")
             .write.mode("overwrite").parquet(staging)
         )
+        # read back with the known schema: no schema-inference job
+        staged = self.spark.read.schema("file_name STRING, row_index BIGINT")
         counts = {
             r["file_name"]: r["n"]
-            for r in self.spark.read.parquet(staging)
+            for r in staged.parquet(staging)
             .groupBy("file_name").agg(F.count("*").alias("n")).collect()
         } if self._published_parquets(staging) else {}
         if not counts:
@@ -6386,13 +6304,12 @@ class DeltaFallbackDataSource(TxLogDataSource):
                 "connector which does not support them"
             )
 
-    def append(self, df: DataFrame, ref: TableRef, **kw) -> None:
+    def append(self, df: DataFrame, ref: TableRef, **kw) -> list[dict] | None:
         d = self._catalog_delegate(ref)
         if d:
             self._reject_kwargs("append", kw)
-            d.append(df, ref)
-        else:
-            super().append(df, ref, **kw)
+            return d.append(df, ref)
+        return super().append(df, ref, **kw)
 
     def overwrite(self, df: DataFrame, ref: TableRef,
                   replace_where: str | None = None, **kw) -> None:
@@ -6403,12 +6320,13 @@ class DeltaFallbackDataSource(TxLogDataSource):
         else:
             super().overwrite(df, ref, replace_where, **kw)
 
-    def overwrite_dynamic(self, df: DataFrame, ref: TableRef) -> None:
+    def overwrite_dynamic(self, df: DataFrame, ref: TableRef, **kw) -> None:
         d = self._catalog_delegate(ref)
         if d:
+            self._reject_kwargs("overwrite_dynamic", kw)
             d.overwrite_dynamic(df, ref)
         else:
-            super().overwrite_dynamic(df, ref)
+            super().overwrite_dynamic(df, ref, **kw)
 
     def merge(self, df: DataFrame, ref: TableRef, spec: MergeSpec, **kw) -> None:
         d = self._catalog_delegate(ref)
